@@ -2920,7 +2920,8 @@ def q_ann_pq_exact(spark, sf_dir):
     encode -> ADC code scan -> exact-cosine rerank returns exactly the
     brute-force top-k, and the oracle is the plain brute-force SQL
     replay over the reduced corpus. Lossy-setting recall is pytest +
-    study evidence (tools/pq_study.py, BASELINE.md round-4 notes)."""
+    study evidence (BASELINE.md "Round-4 notes: audio modality +
+    product quantization", the PQ study)."""
     from spatialpandas_spark.operators.pq import pq_encode, pq_topk, train_pq
 
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)

@@ -18,10 +18,11 @@ Division of labor with the rest of the stack:
   size; one TakeOrdered job, same shape as ``similarity._centroids``).
 - ``pq_encode``: one Arrow-batched linear scan, corpus-side, fully
   distributed; emits a ``binary`` code column (m_sub bytes/row).
-- ``pq_topk``: ADC scan with the same two-phase partial-top-k shape as
-  ``brute_force_topk`` (per-partition reduction, window over survivors
-  only), plus an optional exact-cosine rerank join against the source
-  vectors for ``k * rerank_factor`` candidates per query.
+- ``PQ``: the codec of the IVF-PQ index (operators/similarity_index.py)
+  — the per-query LUT and the block / pair ADC scorers. ``pq_topk`` is
+  that index's probe over a single bucket: the two-phase partial-top-k
+  shape of ``brute_force_topk`` plus an optional exact-cosine rerank of
+  ``k * rerank_factor`` candidates per query.
 """
 
 from __future__ import annotations
@@ -30,11 +31,11 @@ import numpy as np
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    DoubleType,
-    StructField,
-    StructType,
+from pyspark.sql.types import DoubleType, StructField, StructType
+
+from spatialpandas_spark.operators.similarity import (
+    _encode_frame,
+    _topk_rerank,
 )
 
 __all__ = ["train_pq", "pq_encode", "pq_topk", "pq_reconstruct_error"]
@@ -46,14 +47,6 @@ def _l2_normalize(X: np.ndarray) -> np.ndarray:
     approximate cosine directly."""
     n = np.sqrt((X * X).sum(axis=1, keepdims=True))
     return np.divide(X, n, out=np.zeros_like(X), where=n > 0)
-
-
-def _check_dims(dim: int, m_sub: int) -> int:
-    if dim % m_sub != 0:
-        raise ValueError(
-            f"vector dim {dim} not divisible by m_sub={m_sub}"
-        )
-    return dim // m_sub
 
 
 def train_pq(
@@ -91,8 +84,9 @@ def train_pq(
     if not rows:
         raise ValueError("train_pq: corpus has no non-null vectors")
     X = _l2_normalize(np.asarray([list(r["v"]) for r in rows], dtype=np.float64))
-    dim = X.shape[1]
-    sub = _check_dims(dim, m_sub)
+    if X.shape[1] % m_sub != 0:
+        raise ValueError(f"vector dim {X.shape[1]} not divisible by m_sub={m_sub}")
+    sub = X.shape[1] // m_sub
     n_codes = min(n_codes, X.shape[0])
     books = []
     for j in range(m_sub):
@@ -133,87 +127,23 @@ def pq_encode(
     Output: (vec_id, code binary) — ``m_sub`` bytes per row. This is the
     column a 100 TB deployment persists and scans; the float vectors are
     only re-read by the exact rerank. Null vectors get null codes."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     B = _books_array(codebooks)
     m_sub, n_codes, sub = B.shape
     if n_codes > 256:
         raise ValueError("n_codes > 256 does not fit uint8 codes")
-
-    out_schema = StructType(
-        [
-            StructField("vec_id", corpus.schema[corpus_id].dataType),
-            StructField("code", BinaryType()),
-        ]
-    )
-    c = corpus.select(
-        F.col(corpus_id).alias("vec_id"),
-        F.col(corpus_vec).cast("array<double>").alias("__cv"),
-    )
     cc2 = [(B[j] * B[j]).sum(1) for j in range(m_sub)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mask = pdf["__cv"].notna().to_numpy()
-            codes: list = [None] * len(pdf)
-            if mask.any():
-                X = _l2_normalize(
-                    np.asarray(
-                        [np.asarray(v, dtype=np.float64) for v in pdf["__cv"][mask]]
-                    )
-                )
-                _check_dims(X.shape[1], m_sub)
-                out = np.empty((X.shape[0], m_sub), dtype=np.uint8)
-                for j in range(m_sub):
-                    S = X[:, j * sub : (j + 1) * sub]
-                    d2 = -2.0 * S @ B[j].T + cc2[j][None, :]
-                    out[:, j] = d2.argmin(1)
-                enc = [r.tobytes() for r in out]
-                it = iter(enc)
-                codes = [next(it) if ok else None for ok in mask]
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "code": codes})
+    def encode(X):
+        X = _l2_normalize(X)
+        if X.shape[1] != m_sub * sub:
+            raise ValueError(f"vector dim {X.shape[1]} != codebook dim {m_sub * sub}")
+        out = np.empty((X.shape[0], m_sub), dtype=np.uint8)
+        for j in range(m_sub):
+            S = X[:, j * sub : (j + 1) * sub]
+            out[:, j] = (-2.0 * S @ B[j].T + cc2[j][None, :]).argmin(1)
+        return out
 
-    return c.mapInPandas(run, out_schema)
-
-
-def _group_topk(q, v, s, n: int):
-    """Keep the ``n`` best (sim desc, id asc) rows per query id, fully
-    vectorized — THE shared reducer of every two-phase top-k path (the
-    collected scans, the distributed pair fallbacks, the IVF-PQ probe).
-    One definition so tie-break/rank semantics cannot silently diverge
-    between paths whose bit-for-bit equivalence the tests pin."""
-    idx = np.lexsort((v, -s, q))
-    q, v, s = q[idx], v[idx], s[idx]
-    starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
-    sizes = np.diff(np.r_[starts, len(q)])
-    rank = np.arange(len(q)) - np.repeat(starts, sizes)
-    keep = rank < n
-    return q[keep], v[keep], s[keep]
-
-
-def _global_topn(cand: DataFrame, n: int) -> DataFrame:
-    """Exact global per-query top-``n`` by (sim desc, vec_id asc) — the
-    same order :func:`_group_topk` applies per partition, applied ACROSS
-    partitions, so the surviving set is bounded |queries| x ``n``
-    independent of the scan's partition count. ADC sims are
-    bit-identical for a given (query, code) pair regardless of which
-    partition scored it (the LUT matmul is per-batch identical), so the
-    global order — and with it the surviving candidate set — is
-    deterministic."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        cand.withColumn("__cr", F.row_number().over(w))
-        .filter(F.col("__cr") <= n)
-        .drop("__cr")
-    )
+    return _encode_frame(corpus, corpus_id, corpus_vec, encode)
 
 
 #: forced candidate-broadcast budget for the exact-rerank joins (guide
@@ -227,9 +157,9 @@ def _rerank_pairs(
     qv: DataFrame,
     cv: DataFrame,
     n_cand: int,
-    n_parts: int,
-    n_queries: int,
-    dim: int,
+    n_parts: int = 0,
+    n_queries: int | None = None,
+    dim: int = 0,
 ) -> DataFrame:
     """Attach query and corpus vectors to the ADC candidate set for the
     exact rerank, with a partition-safe join strategy (round-15 advice
@@ -245,90 +175,34 @@ def _rerank_pairs(
       to round 14 (the richer pool feeds the rerank, which is the
       documented approximate-candidate semantics the recall tests pin);
     - bound too big: reduce to the global per-query top-``n_cand`` first
-      (:func:`_global_topn`, an exact partition-independent refinement of
-      the same order) and broadcast that — now provably ``n_queries x
+      (``similarity._topk_rerank``: the same (sim desc, vec_id asc) order
+      across partitions; ADC sims of a (query, code) pair do not depend
+      on the partition that scored it, so the surviving set is
+      deterministic) and broadcast that — now provably ``n_queries x
       n_cand`` rows;
     - even that exceeds the budget (huge collected query sets x wide
       vectors): leave the join strategy to the planner, which sees a
-      small exchange it can size at runtime (AQE).
+      small exchange it can size at runtime (AQE);
+    - ``n_queries=None`` (the distributed fallback's oversized, uncounted
+      query side): the plain planner join, never a broadcast.
     """
+    plain = n_queries is None
     per_row = dim * 8 + 48  # query vector + ids/struct overhead
-    if n_parts * n_queries * n_cand * per_row > _CAND_BROADCAST_CAP:
-        cand = _global_topn(cand, n_cand)
-        if n_queries * n_cand * per_row > _CAND_BROADCAST_CAP:
-            return (
-                cand.select("qid", "vec_id")
-                .join(qv, "qid")
-                .join(cv, "vec_id")
-                .select("qid", "vec_id", "__qv", "__cv")
-            )
+    if not plain and n_parts * n_queries * n_cand * per_row > _CAND_BROADCAST_CAP:
+        cand = _topk_rerank(cand, n_cand)
+        plain = n_queries * n_cand * per_row > _CAND_BROADCAST_CAP
+    if plain:
+        return (
+            cand.select("qid", "vec_id")
+            .join(qv, "qid")
+            .join(cv, "vec_id")
+            .select("qid", "vec_id", "__qv", "__cv")
+        )
     return (
         F.broadcast(cand.select("qid", "vec_id").join(F.broadcast(qv), "qid"))
         .join(cv, "vec_id")
         .select("qid", "vec_id", "__qv", "__cv")
     )
-
-
-def _adc_pair_scan(
-    pairs: DataFrame, B: np.ndarray, n_cand: int, out_schema: StructType
-) -> DataFrame:
-    """Distributed ADC over a PAIR frame (qid, __qv, vec_id, code): one
-    Arrow pass builds the per-distinct-query LUT inside each batch (the
-    IDENTICAL ``Q_sub @ B[j].T`` matmul the collected path uses, so a
-    given (query, code) pair scores bit-for-bit the same on either
-    path), fancy-indexes scores, and reduces to the per-partition
-    top-``n_cand`` per query. This is the fallback engine for oversized
-    query sides — no driver materialization anywhere."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    m_sub, n_codes, sub = B.shape
-
-    def _reduce(q, v, s):
-        return _group_topk(q, v, s, n_cand)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: list = []
-        for pdf in batches:
-            ok = (pdf["code"].notna() & pdf["__qv"].notna()).to_numpy()
-            if not ok.any():
-                continue
-            pdf = pdf[ok]
-            inv, _uniq = pd.factorize(pdf["qid"], sort=False)
-            # first-occurrence row per distinct query: inv labels appear
-            # in first-seen order, so unique's return_index gives them
-            _, fidx = np.unique(inv, return_index=True)
-            Q = _l2_normalize(
-                np.asarray(
-                    [
-                        np.asarray(v, dtype=np.float64)
-                        for v in pdf["__qv"].iloc[fidx]
-                    ]
-                )
-            )
-            _check_dims(Q.shape[1], m_sub)
-            lut = np.stack(
-                [Q[:, j * sub : (j + 1) * sub] @ B[j].T for j in range(m_sub)],
-                axis=1,
-            )
-            C = np.frombuffer(
-                b"".join(bytes(b) for b in pdf["code"]), dtype=np.uint8
-            ).reshape(-1, m_sub)
-            scores = np.zeros(len(pdf))
-            for j in range(m_sub):
-                scores += lut[inv, j, C[:, j]]
-            acc.append(
-                _reduce(
-                    pdf["qid"].to_numpy(), pdf["vec_id"].to_numpy(), scores
-                )
-            )
-        if acc:
-            q, v, s = (np.concatenate([a[i] for a in acc]) for i in range(3))
-            q, v, s = _reduce(q, v, s)
-            yield pd.DataFrame({"qid": q, "vec_id": v, "sim": s})
-
-    return pairs.mapInPandas(run, out_schema)
 
 
 def pq_topk(
@@ -344,136 +218,24 @@ def pq_topk(
     corpus_vec: str = "embedding",
     max_collected_queries: int = 10_000,
 ) -> DataFrame:
-    """ADC approximate top-k over a PQ code column.
+    """ADC approximate top-k over a PQ code column: the IVF probe
+    (``similarity_index._probe``) over a single bucket. Per partition,
+    one fancy-indexing pass scores every (query, row) pair from the
+    per-query ``m_sub x n_codes`` lookup tables and keeps the local top-c
+    (``c = k * rerank_factor`` with ``rerank``, else ``k``); the final
+    window ranks survivors only. With ``rerank`` the candidates are
+    re-scored with exact cosine against the float vectors, so ``sim`` is
+    exact and only the candidate CHOICE is approximate (the IVFADC
+    refinement step). Above ``max_collected_queries`` the operator
+    degrades to the distributed pair formulation instead of raising.
+    Columns out: (qid, vec_id, sim, rank)."""
+    from spatialpandas_spark.operators.similarity_index import _probe
 
-    Per partition of the code table, ONE fancy-indexing pass scores every
-    (query, row) pair from the per-query lookup tables (``m_sub x
-    n_codes`` partial inner products, built once per query per batch set)
-    and reduces to the local top-c (``c = k * rerank_factor`` when a
-    rerank frame is supplied, else ``k``); the final window ranks only
-    the tiny survivor set — the same two-phase shape as
-    ``brute_force_topk``. With ``rerank``, the surviving candidates are
-    joined back to the float vectors and re-scored with exact cosine, so
-    ``sim`` in the output is exact and only the candidate CHOICE is
-    approximate (the standard IVFADC refinement step).
-
-    The query side is bounded exactly like ``brute_force_topk``: a
-    ``limit(n+1)`` collect guards the driver, and ABOVE
-    ``max_collected_queries`` the operator degrades to the fully
-    distributed pair formulation (:func:`_adc_pair_scan` — same ADC
-    arithmetic, candidates from a qid-grouped Arrow pair scan, no
-    driver materialization) instead of raising. Columns out:
-    (qid, vec_id, sim, rank)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from .similarity import _topk_rerank, pair_cosine_arrow
-
-    B = _books_array(codebooks)
-    m_sub, n_codes, sub = B.shape
-    q_sel = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(query_vec).cast("array<double>").alias("__qv"),
-    ).filter(F.col("__qv").isNotNull())
-    n_cand = k * rerank_factor if rerank is not None else k
-    cds = codes.select("vec_id", "code")
-    out_schema = StructType(
-        [
-            StructField("qid", q_sel.schema["qid"].dataType),
-            StructField("vec_id", cds.schema["vec_id"].dataType),
-            StructField("sim", DoubleType()),
-        ]
+    return _probe(
+        PQ, _books_array(codebooks), queries, codes, k, rerank,
+        rerank_factor, query_id, query_vec, corpus_id, corpus_vec,
+        max_collected_queries,
     )
-    qrows = q_sel.limit(max_collected_queries + 1).collect()
-    if len(qrows) > max_collected_queries:
-        # distributed fallback: O(|Q| x |C|) is inherent to scoring an
-        # oversized query set; put it on the cluster (brute_force_topk's
-        # discipline), with the rerank join NOT broadcasting the large
-        # query side
-        pairs = cds.crossJoin(q_sel).select("qid", "__qv", "vec_id", "code")
-        cand = _adc_pair_scan(pairs, B, n_cand, out_schema)
-        if rerank is None:
-            return _topk_rerank(cand, k)
-        cv = rerank.select(
-            F.col(corpus_id).alias("vec_id"),
-            F.col(corpus_vec).cast("array<double>").alias("__cv"),
-        )
-        rr = (
-            cand.select("qid", "vec_id")
-            .join(q_sel, "qid")
-            .join(cv, "vec_id")
-            .select("qid", "vec_id", "__qv", "__cv")
-        )
-        return _topk_rerank(pair_cosine_arrow(rr), k)
-    if not qrows:
-        return codes.sparkSession.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("qid", q_sel.schema["qid"].dataType),
-                    StructField("vec_id", codes.schema["vec_id"].dataType),
-                    StructField("sim", DoubleType()),
-                ]
-            ),
-        ).withColumn("rank", F.lit(1).cast("int"))
-    qids = np.asarray([r["qid"] for r in qrows])
-    Q = _l2_normalize(
-        np.asarray([np.asarray(r["__qv"], dtype=np.float64) for r in qrows])
-    )
-    _check_dims(Q.shape[1], m_sub)
-    # per-query LUT: lut[q, j, c] = dot(Q[q] subspace j, codeword c)
-    lut = np.stack(
-        [Q[:, j * sub : (j + 1) * sub] @ B[j].T for j in range(m_sub)], axis=1
-    )
-
-    def _reduce(q, v, s):
-        return _group_topk(q, v, s, n_cand)
-
-    def adc_scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: list = []
-        for pdf in batches:
-            ok = pdf["code"].notna()
-            if not ok.any():
-                continue
-            vid = pdf["vec_id"][ok].to_numpy()
-            C = np.frombuffer(
-                b"".join(bytes(b) for b in pdf["code"][ok]), dtype=np.uint8
-            ).reshape(-1, m_sub)
-            # scores: (n_q, n_rows) = sum_j lut[:, j, C[:, j]]
-            scores = np.zeros((lut.shape[0], C.shape[0]))
-            for j in range(m_sub):
-                scores += lut[:, j, :][:, C[:, j]]
-            nq, nr = scores.shape
-            qcol = np.repeat(np.arange(nq), nr)
-            vcol = np.tile(vid, nq)
-            acc.append(_reduce(qcol, vcol, scores.ravel()))
-        if acc:
-            q, v, s = (np.concatenate([a[i] for a in acc]) for i in range(3))
-            q, v, s = _reduce(q, v, s)
-            yield pd.DataFrame({"qid": qids[q], "vec_id": v, "sim": s})
-
-    cand = cds.mapInPandas(adc_scan, out_schema)
-    if rerank is None:
-        return _topk_rerank(cand, k)
-    # exact rerank: join the tiny candidate set back to the float vectors
-    qv = q_sel  # qid -> query vector
-    cv = rerank.select(
-        F.col(corpus_id).alias("vec_id"),
-        F.col(corpus_vec).cast("array<double>").alias("__cv"),
-    )
-    # broadcast the candidate side of the vector join so the float
-    # corpus streams through a broadcast hash join instead of being
-    # shuffled (round-14 b20 profile: the old plan shuffle-wrote the
-    # entire cached vector corpus, ~54 MB at sf0.1, to equi-join a few
-    # hundred rows) — strategy chosen by the construction-time bound so
-    # the forced hint can never exceed the broadcast cap (round-15)
-    pairs = _rerank_pairs(
-        cand, qv, cv, n_cand,
-        n_parts=cds.rdd.getNumPartitions(),
-        n_queries=len(qrows), dim=Q.shape[1],
-    )
-    return _topk_rerank(pair_cosine_arrow(pairs), k)
 
 
 def pq_reconstruct_error(
@@ -520,3 +282,65 @@ def pq_reconstruct_error(
         (F.sum("sse") / F.sum("n")).alias("mse"),
         F.sum("n").cast("long").alias("n_vectors"),
     )
+
+
+class _PQCodec:
+    """The PQ codec of the IVF index (operators/similarity_index.py owns
+    build, probe, append and compaction). Model: the codebook array
+    ``B`` (m_sub, n_codes, sub_dim). Queries become per-query LUTs
+    ``lut[q, j, c] = dot(Q[q] subspace j, codeword c)``; a row's ADC
+    score is the sum of its ``m_sub`` table entries."""
+
+    kind = "ivfpq"
+    sidecar = "_ivfpq.json"
+
+    def train(self, corpus, corpus_id, corpus_vec, m_sub=8, n_codes=256,
+              sample_n=4096, pq_iters=8):
+        return train_pq(corpus, m_sub, n_codes, sample_n, pq_iters,
+                        corpus_id, corpus_vec)
+
+    def encode(self, corpus, books, corpus_id, corpus_vec):
+        return pq_encode(corpus, books, corpus_id, corpus_vec)
+
+    def dump(self, books) -> dict:
+        return {"codebooks": books, "m_sub": len(books)}
+
+    def load(self, meta: dict) -> dict:
+        return meta
+
+    def model(self, meta: dict) -> np.ndarray:
+        return _books_array(meta["codebooks"])
+
+    def dim(self, B: np.ndarray) -> int:
+        return B.shape[0] * B.shape[2]
+
+    def queries(self, B: np.ndarray, Q: np.ndarray) -> np.ndarray:
+        m_sub, _, sub = B.shape
+        Qn = _l2_normalize(Q)
+        return np.stack(
+            [Qn[:, j * sub : (j + 1) * sub] @ B[j].T for j in range(m_sub)],
+            axis=1,
+        )
+
+    def rows(self, B: np.ndarray, C: np.ndarray) -> np.ndarray:
+        if C.shape[1] != B.shape[0]:
+            raise ValueError(f"code width {C.shape[1]} != m_sub {B.shape[0]}")
+        return C
+
+    def block(self, lut: np.ndarray, C: np.ndarray) -> np.ndarray:
+        """(queries x rows) ADC sims."""
+        scores = np.zeros((lut.shape[0], C.shape[0]))
+        for j in range(C.shape[1]):
+            scores += lut[:, j, :][:, C[:, j]]
+        return scores
+
+    def pair(self, lut: np.ndarray, inv: np.ndarray, C: np.ndarray) -> np.ndarray:
+        """ADC sim of row i against query ``inv[i]`` — the block scorer's
+        additions in the same order, so a pair scores bit-identically."""
+        scores = np.zeros(C.shape[0])
+        for j in range(C.shape[1]):
+            scores += lut[inv, j, C[:, j]]
+        return scores
+
+
+PQ = _PQCodec()

@@ -42,6 +42,22 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when((na > 0) & (nb > 0), dot(a, b) / (na * nb)).otherwise(F.lit(0.0))
 
 
+def _group_topk(q, v, s, n: int):
+    """Keep the ``n`` best (sim desc, id asc) rows per query id, fully
+    vectorized — THE shared reducer of every two-phase top-k path (brute
+    force, the rerank, the IVF codec scans and their distributed pair
+    fallbacks).
+    One definition so tie-break/rank semantics cannot silently diverge
+    between paths whose bit-for-bit equivalence the tests pin."""
+    idx = np.lexsort((v, -s, q))
+    q, v, s = q[idx], v[idx], s[idx]
+    starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
+    sizes = np.diff(np.r_[starts, len(q)])
+    rank = np.arange(len(q)) - np.repeat(starts, sizes)
+    keep = rank < n
+    return q[keep], v[keep], s[keep]
+
+
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -94,9 +110,9 @@ def brute_force_topk(
     # the probe set is small by contract; collecting it lets ONE Arrow pass
     # over the corpus compute all query sims per batch — no q x corpus pair
     # table, no interpreted per-row HOF fold (measured 7.3 s -> ~1 s at
-    # 1M x 8, tools/crossover_ann.py). The limit(n+1) bound makes the
-    # collect safe: an oversized query side costs one truncated fetch, not
-    # a driver OOM.
+    # 1M x 8, BASELINE.md "Round-3 ANN crossover"). The limit(n+1) bound
+    # makes the collect safe: an oversized query side costs one truncated
+    # fetch, not a driver OOM.
     qrows = q_sel.limit(max_collected_queries + 1).collect()
     if len(qrows) > max_collected_queries:
         cand = c.crossJoin(q_sel).select("qid", "vec_id", "__qv", "__cv")
@@ -117,14 +133,7 @@ def brute_force_topk(
     )
 
     def _reduce(q, v, s):
-        # keep the k best (sim desc, id asc) per qid, fully vectorized
-        idx = np.lexsort((v, -s, q))
-        q, v, s = q[idx], v[idx], s[idx]
-        starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
-        sizes = np.diff(np.r_[starts, len(q)])
-        rank = np.arange(len(q)) - np.repeat(starts, sizes)
-        keep = rank < k
-        return q[keep], v[keep], s[keep]
+        return _group_topk(q, v, s, k)
 
     def sims_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         acc: list = []
@@ -164,13 +173,7 @@ def _topk_rerank(sims: DataFrame, k: int) -> DataFrame:
     import pandas as pd
 
     def _reduce(q, v, s):
-        idx = np.lexsort((v, -s, q))
-        q, v, s = q[idx], v[idx], s[idx]
-        starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
-        sizes = np.diff(np.r_[starts, len(q)])
-        rank = np.arange(len(q)) - np.repeat(starts, sizes)
-        keep = rank < k
-        return q[keep], v[keep], s[keep]
+        return _group_topk(q, v, s, k)
 
     def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         acc: list = []
@@ -217,13 +220,44 @@ def _stack(col) -> "np.ndarray":
     return np.asarray([np.asarray(v, dtype=np.float64) for v in col])
 
 
+def _encode_frame(corpus, corpus_id, corpus_vec, encode) -> DataFrame:
+    """``(vec_id, code binary)`` in one Arrow-batched linear scan — the
+    frame of both codecs' encoders (``pq.pq_encode``, ``sq.sq8_encode``).
+    ``encode`` maps a batch's non-null vectors, stacked (rows, dim), to a
+    uint8 code matrix. Null vectors get null codes."""
+    import pandas as pd
+    from pyspark.sql.types import BinaryType, StructField, StructType
+
+    schema = StructType([
+        StructField("vec_id", corpus.schema[corpus_id].dataType),
+        StructField("code", BinaryType()),
+    ])
+
+    def run(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            mask = pdf["__cv"].notna().to_numpy()
+            codes: list = [None] * len(pdf)
+            if mask.any():
+                it = iter(encode(_stack(pdf["__cv"][mask])))
+                codes = [next(it).tobytes() if ok else None for ok in mask]
+            yield pd.DataFrame({"vec_id": pdf["vec_id"], "code": codes})
+
+    return corpus.select(
+        F.col(corpus_id).alias("vec_id"),
+        F.col(corpus_vec).cast("array<double>").alias("__cv"),
+    ).mapInPandas(run, schema)
+
+
 def bucket_assign_arrow(
     df: DataFrame, cents: list[list[float]], vec_col: str = "__cv"
 ) -> DataFrame:
     """Max-cosine centroid assignment as one Arrow pass (adds
     ``__bucket``). The interpreted per-row HOF fold costs
     O(n_centroids x dim) element evaluations per corpus row — measured
-    9-14x slower than brute force at 1M vectors (tools/crossover_ann.py);
+    9-14x slower than brute force at 1M vectors (BASELINE.md "Round-3 ANN
+    crossover");
     this kernel does the same math vectorized across each record batch
     while keeping the SEQUENTIAL dim fold, so bucket ids and sims stay
     bit-identical to the Catalyst expression and the SQL oracle

@@ -10,27 +10,152 @@ n_probe/n_centroids of the data, verifiable in the plan's
 ``PartitionFilters``. This is the same stats-driven-pruning philosophy as
 the spatial manifest (SURVEY §2.9): the "index" is layout + metadata, not
 a server-side structure.
+
+One index, three encodings of the bucket rows. The flat index stores the
+float vectors and probes with exact SQL cosines. The SQ8 and PQ codecs
+(``SQ8`` in operators/sq.py, ``PQ`` in operators/pq.py) store a ``code``
+column and score it by ADC — the IVFADC design of Jégou, Douze & Schmid
+(TPAMI 2011), minus the residual encoding, so codes are shared with the
+one-shot ``sq8_topk``/``pq_topk``. IVF pruning bounds WHICH bytes a probe
+reads (n_probe/n_centroids of the corpus); the codec bounds HOW MANY
+bytes per row (dim int8 codes for SQ8, m_sub bytes for PQ). A codec owns
+only what differs — train, encode, its sidecar fields, its dim and a
+block and a pair scorer — and build, append, probe, the distributed
+fallback, rerank and compaction below are written once, parameterized by
+it. ``sq8_topk`` and ``pq_topk`` are the single-bucket case of the probe.
 """
 
 from __future__ import annotations
 
+import inspect
 import json
-import os
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
+from spatialpandas_spark.operators.pq import PQ, _rerank_pairs
 from spatialpandas_spark.operators.similarity import (
-    _centroids,
     _centroid_sims,
+    _centroids,
+    _group_topk,
+    _seq_dot,
+    _seq_pair_dot,
+    _stack,
     _topk_rerank,
     _with_centroids,
     bucket_assign_arrow,
     kmeans_refine,
     pair_cosine_arrow,
 )
+from spatialpandas_spark.operators.sq import SQ8
+from spatialpandas_spark.sources import fs as _fs
 
 _SIDECAR = "_ivf_centroids.json"
+
+#: index kind -> codec; the flat float index has none
+_CODECS = {"ivf": None, "ivfsq8": SQ8, "ivfpq": PQ}
+
+
+def _codec(kind: str):
+    if kind not in _CODECS:
+        raise ValueError(f"unknown index kind {kind!r}")
+    return _CODECS[kind]
+
+
+# ------------------------------------------------------ build / append / meta
+
+
+def _sidecar_path(path: str, codec) -> str:
+    return f"{path.rstrip('/')}/{codec.sidecar if codec else _SIDECAR}"
+
+
+def _load_meta(path: str, codec, filesystem=None) -> dict:
+    meta = json.loads(
+        _fs.read_text(_sidecar_path(path, codec), filesystem=filesystem)
+    )
+    return codec.load(meta) if codec else meta
+
+
+def _write(corpus, path, cents, codec, model, store_vectors, corpus_id,
+           corpus_vec, mode) -> None:
+    """Bucket-assign (max-cosine centroid) and, with a codec, encode the
+    corpus, then write it partitioned by ``bucket``."""
+    # null vectors are unindexable — drop at the boundary (documented)
+    rows = bucket_assign_arrow(
+        corpus.select(
+            F.col(corpus_id).alias("vec_id"),
+            F.col(corpus_vec).cast("array<double>").alias("vec"),
+        ).filter(F.col("vec").isNotNull()),
+        cents,
+        vec_col="vec",
+    ).withColumnRenamed("__bucket", "bucket")
+    if codec:
+        codes = codec.encode(corpus, model, corpus_id, corpus_vec)
+        rows = rows.join(codes, "vec_id").select(
+            "vec_id", "bucket", "code", *(["vec"] if store_vectors else [])
+        )
+    # one file per bucket dir (same small-files lesson as the dedup
+    # index): without this, every writing task emits a sliver into every
+    # bucket dir and the probe pays per-file open cost 32x over. Row
+    # groups keep single files splittable for big buckets at scale. An
+    # append adds one file per touched bucket; compact_vector_index
+    # repacks the churn.
+    rows.repartition("bucket").write.mode(mode).partitionBy("bucket").parquet(
+        path
+    )
+
+
+def _check_options(codec, store_vectors, train_kw: dict) -> None:
+    """Reject build options the index kind does not take, before any
+    scan: the flat index has no codec options and always stores its
+    vectors; a codec takes the keywords of its ``train``."""
+    if codec is None:
+        given = sorted(train_kw)
+        if store_vectors is not None:
+            given.append("store_vectors")
+        if given:
+            raise TypeError(f"the flat index takes no codec options: {given}")
+        return
+    try:
+        inspect.signature(codec.train).bind(None, None, None, **train_kw)
+    except TypeError as e:
+        raise TypeError(f"build_{codec.kind}_index: {e}") from None
+
+
+def _build(corpus, path, codec, n_centroids=16, kmeans_iters=2,
+           store_vectors=None, corpus_id="vec_id", corpus_vec="embedding",
+           **train_kw):
+    """Centroids (+ codec model) -> partitioned write -> sidecar. Returns
+    the sidecar dict, or the flat index's centroid table."""
+    _check_options(codec, store_vectors, train_kw)
+    cents = _centroids(corpus, corpus_id, corpus_vec, n_centroids)
+    if kmeans_iters > 0:
+        cents = kmeans_refine(corpus, cents, kmeans_iters, corpus_id, corpus_vec)
+    meta, model = {"centroids": cents}, None
+    if codec:
+        model = codec.train(corpus, corpus_id, corpus_vec, **train_kw)
+        meta.update(codec.dump(model), store_vectors=bool(store_vectors))
+    _write(corpus, path, cents, codec, model, store_vectors, corpus_id,
+           corpus_vec, "overwrite")
+    # sidecar AFTER the data write so a readable index is always complete;
+    # pyarrow-fs layer so object-store index paths work (S6)
+    _fs.write_text(_sidecar_path(path, codec), json.dumps(meta))
+    return codec.load(meta) if codec else cents
+
+
+def _append(corpus, path, codec, corpus_id, corpus_vec) -> None:
+    """Append under the index's PINNED centroids and codec model (one
+    scan + one partitioned append; the sidecar is untouched, so readers
+    never see a half-updated model)."""
+    meta = _load_meta(path, codec)
+    _write(corpus, path, meta["centroids"], codec, codec.model(meta),
+           meta.get("store_vectors"), corpus_id, corpus_vec, "append")
+
+
+# ------------------------------------------------------------- flat index
 
 
 def build_ivf_index(
@@ -49,43 +174,12 @@ def build_ivf_index(
     for the deterministic md5-sample path (exact SQL twin, used by the
     correctness gate). See ``ivf_topk`` for measured recall expectations
     on clustered vs isotropic data."""
-    cents = _centroids(corpus, corpus_id, corpus_vec, n_centroids)
-    if kmeans_iters > 0:
-        cents = kmeans_refine(corpus, cents, kmeans_iters, corpus_id, corpus_vec)
-
-    # null vectors are unindexable — drop at the boundary (documented)
-    assigned = bucket_assign_arrow(
-        corpus.select(
-            F.col(corpus_id).alias("vec_id"),
-            F.col(corpus_vec).cast("array<double>").alias("vec"),
-        ).filter(F.col("vec").isNotNull()),
-        cents,
-        vec_col="vec",
-    ).withColumnRenamed("__bucket", "bucket")
-    # one file per bucket dir (same small-files lesson as the dedup
-    # index): without this, every writing task emits a sliver into every
-    # bucket dir and the probe pays per-file open cost 32x over. Row
-    # groups keep single files splittable for big buckets at scale.
-    assigned.repartition("bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(path)
-
-    # sidecar AFTER the data write so a readable index is always complete;
-    # pyarrow-fs layer so object-store index paths work (S6)
-    from spatialpandas_spark.sources import fs as _fs
-
-    _fs.write_text(
-        f"{path.rstrip('/')}/{_SIDECAR}", json.dumps({"centroids": cents})
-    )
-    return cents
+    return _build(corpus, path, None, n_centroids, kmeans_iters,
+                  corpus_id=corpus_id, corpus_vec=corpus_vec)
 
 
 def load_ivf_centroids(path: str, filesystem=None) -> list[list[float]]:
-    from spatialpandas_spark.sources import fs as _fs
-
-    return json.loads(
-        _fs.read_text(f"{path.rstrip('/')}/{_SIDECAR}", filesystem=filesystem)
-    )["centroids"]
+    return _load_meta(path, None, filesystem)["centroids"]
 
 
 def query_ivf_index(
@@ -100,6 +194,7 @@ def query_ivf_index(
     """Top-k by cosine over the union of each query's ``n_probe`` closest
     buckets. The bucket filter is a plain equality on the partition
     column, so Spark prunes unprobed directories at planning time.
+    Scores are exact float cosines (the SQL-probe twin of the gate).
     Columns out: (qid, vec_id, sim, rank)."""
     cents = load_ivf_centroids(path)
     q = _with_centroids(
@@ -131,17 +226,253 @@ def query_ivf_index(
     return _topk_rerank(pair_cosine_arrow(cand), k)
 
 
-# ------------------------------------------------------------- IVF-PQ index
-# The composition of the two ANN scale levers (the IVFADC design of
-# Jégou, Douze & Schmid, TPAMI 2011, minus the residual encoding — codes
-# quantize the normalized vector directly so they are shared with the
-# flat-PQ path and the exact-reconstruction tests): IVF partition
-# pruning bounds WHICH bytes a probe reads (n_probe/n_centroids of the
-# corpus), PQ bounds HOW MANY bytes per row (m_sub instead of 4*dim).
-# A probe of a 100 TB corpus at defaults reads 25% of 1/32 of the data:
-# ~0.8% of the raw bytes, before any rerank.
+# ---------------------------------------------------------- the codec probe
 
-_PQ_SIDECAR = "_ivfpq.json"
+
+def _check_dim(q_dims, dim: int) -> None:
+    """THE query-dim check of every codec probe: a longer query would
+    otherwise score a truncated prefix (PQ's LUT reads only the first
+    m_sub * sub_dim dims), a shorter one fail deep inside numpy."""
+    bad = sorted(set(q_dims) - {dim})
+    if bad:
+        raise ValueError(f"query vector dim {bad[0]} != index dim {dim}")
+
+
+def _codes(col) -> np.ndarray:
+    """A binary code column as a (rows, code width) uint8 matrix."""
+    return np.frombuffer(
+        b"".join(bytes(b) for b in col), dtype=np.uint8
+    ).reshape(len(col), -1)
+
+
+def _rank_probes_seq(Q, C, n_probe: int):
+    """(n_queries, n_probe) centroid indices by raw cosine DESC with
+    ties to the HIGHER index — the probe contract of
+    ``query_ivf_index``'s ``sort_array(desc)`` over (sim, index)
+    structs and of the gate's ``ORDER BY cos DESC, ci DESC`` replay.
+    Cosines use the sequential-fold dot and the
+    ``dot / (sqrt(qq) * sqrt(cc))`` op order of the SQL ``cos()`` macro
+    — bit-identical, so probe sets can't diverge on near-ties."""
+    qn = np.sqrt(_seq_pair_dot(Q, Q))
+    cn = np.sqrt(_seq_pair_dot(C, C))
+    sims = np.empty((Q.shape[0], C.shape[0]), dtype=np.float64)
+    for j in range(C.shape[0]):
+        ok = (qn > 0) & (cn[j] > 0)
+        sims[:, j] = np.where(ok, _seq_dot(Q, C[j]) / (qn * cn[j]), 0.0)
+    # stable argsort over the column-REVERSED matrix: ties keep the
+    # lower reversed index = the HIGHER original index first
+    order_rev = np.argsort(-sims[:, ::-1], axis=1, kind="stable")[:, :n_probe]
+    return (C.shape[0] - 1) - order_rev
+
+
+def _scan(frame, codec, model, score, n_cand, schema, qids=None) -> DataFrame:
+    """The Arrow pass of both probe paths: decode each batch's codes with
+    the codec, score them (``score(pdf, rows)`` yields (query, vec_id,
+    sim) arrays) and keep each query's top-``n_cand`` per partition —
+    the first phase of the two-phase top-k. ``qids`` maps query indices
+    back to ids."""
+
+    def run(batches):
+        acc: list = []
+        for pdf in batches:
+            pdf = pdf[pdf["code"].notna()]
+            if len(pdf):
+                rows = codec.rows(model, _codes(pdf["code"]))
+                acc += [_group_topk(*t, n_cand) for t in score(pdf, rows)]
+        if acc:
+            q, v, s = _group_topk(
+                *(np.concatenate([a[i] for a in acc]) for i in range(3)), n_cand
+            )
+            yield pd.DataFrame(
+                {"qid": q if qids is None else qids[q], "vec_id": v, "sim": s}
+            )
+
+    return frame.mapInPandas(run, schema)
+
+
+def _block_scorer(codec, qstate, groups):
+    """Collected path: score each bucket's rows against the queries
+    probing it (``groups``: bucket -> query indices; None = every query,
+    every row) with the codec's block scorer, so each query's scores stay
+    within its own probed buckets."""
+    every = np.arange(len(qstate))
+
+    def score(pdf, rows):
+        vid = pdf["vec_id"].to_numpy()
+        if groups is None:
+            parts = [(every, slice(None))]
+        else:
+            bk = pdf["bucket"].to_numpy()
+            parts = [
+                (groups[int(b)], bk == b) for b in np.unique(bk)
+                if int(b) in groups
+            ]
+        for qs, r in parts:
+            # every query: pass the state itself, not a per-batch copy
+            S = codec.block(qstate if qs is every else qstate[qs], rows[r])
+            yield np.repeat(qs, S.shape[1]), np.tile(vid[r], len(qs)), S.ravel()
+
+    return score
+
+
+def _pair_scorer(codec, model):
+    """Distributed path, over a (qid, __qv, vec_id, code) pair frame: each
+    batch prepares its distinct queries once and scores every pair with
+    the codec's pair scorer — the block scorer's arithmetic per (query,
+    code) pair, which the fallback row-identity tests pin."""
+    dim = codec.dim(model)
+
+    def score(pdf, rows):
+        inv, _ = pd.factorize(pdf["qid"], sort=False)
+        # labels appear in first-seen order: return_index gives the
+        # first row of each distinct query
+        _, first = np.unique(inv, return_index=True)
+        qv = pdf["__qv"].iloc[first]
+        _check_dim((len(v) for v in qv), dim)
+        sims = codec.pair(codec.queries(model, _stack(qv)), inv, rows)
+        yield pdf["qid"].to_numpy(), pdf["vec_id"].to_numpy(), sims
+
+    return score
+
+
+def _assign_probes(q_sel: DataFrame, cents, n_probe: int) -> DataFrame:
+    """Probe assignment as an Arrow pass over the query frame: the
+    collected path's :func:`_rank_probes_seq`, exploded to (qid, __qv,
+    bucket) rows."""
+    schema = StructType(
+        list(q_sel.schema.fields) + [StructField("bucket", IntegerType())]
+    )
+
+    def run(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            _check_dim((len(v) for v in pdf["__qv"]), cents.shape[1])
+            order = _rank_probes_seq(_stack(pdf["__qv"]), cents, n_probe)
+            yield pd.DataFrame({
+                "qid": pdf["qid"].to_numpy().repeat(order.shape[1]),
+                "__qv": pdf["__qv"].to_numpy().repeat(order.shape[1]),
+                "bucket": order.ravel().astype("int32"),
+            })
+
+    # checkpoint: the probe frame feeds BOTH the distinct-bucket collect
+    # and the bucket equi-join — without it the Arrow assignment pass
+    # over the (by definition oversized) query frame runs twice
+    return q_sel.mapInPandas(run, schema).localCheckpoint(eager=True)
+
+
+def _probe(codec, model, queries, codes, k=10, rerank=None, rerank_factor=4,
+           query_id="qid", query_vec="qvec", corpus_id="vec_id",
+           corpus_vec="embedding", max_collected_queries=10_000,
+           cents=None, n_probe=1, store_vectors=False) -> DataFrame:
+    """Top-k of ``queries`` by codec ADC over ``codes`` (vec_id, code
+    [, bucket, vec]).
+
+    With ``cents`` each query ranks the centroids driver-side and scores
+    only the rows of its ``n_probe`` closest buckets; the union of probed
+    buckets is a STATIC planning-time partition filter (the dedup-index
+    discipline, no reliance on DPP). Without, every query scores every
+    row — one bucket. ``rerank`` is None (ADC sims out), a corpus frame
+    (exact-cosine rerank of ``k * rerank_factor`` candidates per query
+    against the source table — the at-scale shape), or ``"stored"``
+    (vectors persisted with ``store_vectors=True``). Above
+    ``max_collected_queries`` the probe degrades to the distributed pair
+    formulation instead of raising: Arrow probe assignment, a bounded
+    distinct-bucket collect (<= n_centroids rows) that keeps the static
+    filter, a bucket equi-join and the codec's pair scorer. Columns out:
+    (qid, vec_id, sim, rank)."""
+    if isinstance(rerank, str):
+        if rerank != "stored":
+            raise ValueError(f"unknown rerank mode {rerank!r}")
+        if not store_vectors:
+            raise ValueError(
+                f"rerank='stored' requires build_{codec.kind}_index"
+                "(store_vectors=True)"
+            )
+    q_sel = queries.select(
+        F.col(query_id).alias("qid"),
+        F.col(query_vec).cast("array<double>").alias("__qv"),
+    ).filter(F.col("__qv").isNotNull())
+    schema = StructType([
+        StructField("qid", q_sel.schema["qid"].dataType),
+        StructField("vec_id", codes.schema["vec_id"].dataType),
+        StructField("sim", DoubleType()),
+    ])
+    n_cand = k * rerank_factor if rerank is not None else k
+    qrows = q_sel.limit(max_collected_queries + 1).collect()
+    _check_dim((len(r["__qv"]) for r in qrows), codec.dim(model))
+    collected = len(qrows) <= max_collected_queries
+    if not qrows:
+        return codes.sparkSession.createDataFrame(
+            [], StructType(schema.fields + [StructField("rank", IntegerType())])
+        )
+    if collected:
+        qids = np.asarray([r["qid"] for r in qrows])
+        Q = _stack([r["__qv"] for r in qrows])
+        groups = None
+        if cents is not None:
+            order = _rank_probes_seq(Q, cents, n_probe)
+            groups = {
+                int(b): np.flatnonzero((order == b).any(axis=1))
+                for b in np.unique(order)
+            }
+            codes = codes.filter(F.col("bucket").isin(sorted(groups)))
+        cds = codes.select(
+            *(["bucket"] if groups is not None else []), "vec_id", "code"
+        )
+        score = _block_scorer(codec, codec.queries(model, Q), groups)
+        cand = _scan(cds, codec, model, score, n_cand, schema, qids)
+    else:
+        if cents is None:
+            pairs = codes.crossJoin(q_sel)
+        else:
+            probes = _assign_probes(q_sel, cents, n_probe)
+            # distinct probed buckets: bounded by n_centroids — tiny collect
+            buckets = sorted(
+                r["bucket"] for r in probes.select("bucket").distinct().collect()
+            )
+            codes = codes.filter(F.col("bucket").isin(buckets))
+            pairs = codes.select("bucket", "vec_id", "code").join(probes, "bucket")
+        cand = _scan(
+            pairs.select("qid", "__qv", "vec_id", "code"), codec, model,
+            _pair_scorer(codec, model), n_cand, schema,
+        )
+    if rerank is None:
+        return _topk_rerank(cand, k)
+    if isinstance(rerank, str):
+        cv = codes.select("vec_id", F.col("vec").alias("__cv"))
+    else:
+        cv = rerank.select(
+            F.col(corpus_id).alias("vec_id"),
+            F.col(corpus_vec).cast("array<double>").alias("__cv"),
+        )
+    # collected: broadcast the candidate side so the stored/pruned vector
+    # partitions stream through a broadcast hash join instead of being
+    # shuffled, the fork chosen by the construction-time bound so the
+    # forced hint never exceeds the broadcast cap; distributed: never
+    # broadcast the (by definition oversized) query side
+    bound = dict(
+        n_parts=cds.rdd.getNumPartitions(), n_queries=len(qids), dim=Q.shape[1]
+    ) if collected else {}
+    pairs = _rerank_pairs(cand, q_sel, cv, n_cand, **bound)
+    return _topk_rerank(pair_cosine_arrow(pairs), k)
+
+
+def _query(spark, path, codec, queries, k=10, n_probe=4, rerank=None,
+           rerank_factor=4, query_id="qid", query_vec="qvec",
+           corpus_id="vec_id", corpus_vec="embedding",
+           max_collected_queries=10_000) -> DataFrame:
+    meta = _load_meta(path, codec)
+    return _probe(
+        codec, codec.model(meta), queries, spark.read.parquet(path), k,
+        rerank, rerank_factor, query_id, query_vec, corpus_id, corpus_vec,
+        max_collected_queries,
+        cents=np.asarray(meta["centroids"], dtype=np.float64),
+        n_probe=n_probe, store_vectors=meta.get("store_vectors"),
+    )
+
+
+# ------------------------------------------------------------ IVF-PQ index
 
 
 def build_ivfpq_index(
@@ -158,56 +489,23 @@ def build_ivfpq_index(
     corpus_vec: str = "embedding",
 ) -> dict:
     """Build a persistent IVF-PQ index: bucket assignment (spherical
-    k-means centroids) + PQ codes, written partitioned by ``bucket``;
-    centroids AND codebooks go to one JSON sidecar (written after the
-    data so a readable index is always complete). ``store_vectors=True``
-    also persists the float vectors for self-contained exact rerank —
-    at scale leave it False and rerank against the source table.
-    Returns the sidecar dict."""
-    from spatialpandas_spark.operators.pq import pq_encode, train_pq
-
-    cents = _centroids(corpus, corpus_id, corpus_vec, n_centroids)
-    if kmeans_iters > 0:
-        cents = kmeans_refine(corpus, cents, kmeans_iters, corpus_id, corpus_vec)
-    books = train_pq(
-        corpus, m_sub=m_sub, n_codes=n_codes, sample_n=sample_n,
-        iters=pq_iters, corpus_id=corpus_id, corpus_vec=corpus_vec,
+    k-means centroids) + PQ codes (``m_sub`` bytes per row), written
+    partitioned by ``bucket``; centroids AND codebooks go to one JSON
+    sidecar (written after the data so a readable index is always
+    complete). A probe of a 100 TB corpus at defaults reads 25% of 1/32
+    of the data: ~0.8% of the raw bytes, before any rerank.
+    ``store_vectors=True`` also persists the float vectors for
+    self-contained exact rerank — at scale leave it False and rerank
+    against the source table. Returns the sidecar dict."""
+    return _build(
+        corpus, path, PQ, n_centroids, kmeans_iters, store_vectors,
+        corpus_id, corpus_vec, m_sub=m_sub, n_codes=n_codes,
+        sample_n=sample_n, pq_iters=pq_iters,
     )
-
-    assigned = bucket_assign_arrow(
-        corpus.select(
-            F.col(corpus_id).alias("vec_id"),
-            F.col(corpus_vec).cast("array<double>").alias("vec"),
-        ).filter(F.col("vec").isNotNull()),
-        cents,
-        vec_col="vec",
-    ).withColumnRenamed("__bucket", "bucket")
-    codes = pq_encode(corpus, books, corpus_id=corpus_id, corpus_vec=corpus_vec)
-    cols = ["vec_id", "bucket", "code"] + (["vec"] if store_vectors else [])
-    joined = assigned.join(codes, "vec_id").select(*cols)
-    # one file per bucket dir — see build_ivf_index's small-files note
-    joined.repartition("bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(path)
-
-    from spatialpandas_spark.sources import fs as _fs
-
-    meta = {
-        "centroids": cents,
-        "codebooks": books,
-        "m_sub": m_sub,
-        "store_vectors": store_vectors,
-    }
-    _fs.write_text(f"{path.rstrip('/')}/{_PQ_SIDECAR}", json.dumps(meta))
-    return meta
 
 
 def load_ivfpq_meta(path: str, filesystem=None) -> dict:
-    from spatialpandas_spark.sources import fs as _fs
-
-    return json.loads(
-        _fs.read_text(f"{path.rstrip('/')}/{_PQ_SIDECAR}", filesystem=filesystem)
-    )
+    return _load_meta(path, PQ, filesystem)
 
 
 def query_ivfpq_index(
@@ -224,272 +522,15 @@ def query_ivfpq_index(
     corpus_vec: str = "embedding",
     max_collected_queries: int = 10_000,
 ) -> DataFrame:
-    """Probe an IVF-PQ index: per query, rank centroids, STATICALLY
-    filter the scan to the union of probe buckets (the probe set is
-    known driver-side, so pruning is a planning-time partition filter —
-    same discipline as the dedup index, no reliance on DPP), ADC-score
-    only the 8-byte codes in those buckets, and keep each query's
-    scores to its own probed buckets. ``rerank`` is ``None`` (ADC sims
-    out), a corpus DataFrame (exact-cosine rerank join against the
-    source table — the at-scale shape), or ``"stored"`` (rerank against
-    vectors persisted with ``store_vectors=True``).
+    """Probe an IVF-PQ index: rank centroids per query, STATICALLY filter
+    the scan to the union of probe buckets, ADC-score only the m_sub-byte
+    codes in those buckets, two-phase top-k; ``rerank`` as in
+    :func:`_probe` (None, a corpus frame, or ``"stored"``).
     Columns out: (qid, vec_id, sim, rank)."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from spatialpandas_spark.operators.pq import _books_array, _l2_normalize
-
-    meta = load_ivfpq_meta(path)
-    cents = np.asarray(meta["centroids"], dtype=np.float64)
-    B = _books_array(meta["codebooks"])
-    m_sub, n_codes, sub = B.shape
-
-    q_sel = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(query_vec).cast("array<double>").alias("__qv"),
-    ).filter(F.col("__qv").isNotNull())
-    qrows = q_sel.limit(max_collected_queries + 1).collect()
-    if len(qrows) > max_collected_queries:
-        # distributed fallback (brute_force_topk's discipline): degrade,
-        # don't raise. Probe assignment runs as an Arrow pass over the
-        # query frame; the DISTINCT probed-bucket set (<= n_centroids
-        # rows, bounded small) is still collected so the scan keeps its
-        # static partition filter; candidates come from a bucket
-        # equi-join + the shared ADC pair scan. Same arithmetic as the
-        # collected path per (query, code) pair.
-        return _query_ivfpq_distributed(
-            spark, path, meta, q_sel, k, n_probe, rerank, rerank_factor,
-            corpus_id, corpus_vec,
-        )
-    if not qrows:
-        empty = StructType(
-            [
-                StructField("qid", q_sel.schema["qid"].dataType),
-                StructField("vec_id", spark.read.parquet(path).schema["vec_id"].dataType),
-                StructField("sim", DoubleType()),
-            ]
-        )
-        return spark.createDataFrame([], empty).withColumn(
-            "rank", F.lit(1).cast("int")
-        )
-    qids = np.asarray([r["qid"] for r in qrows])
-    Q = _l2_normalize(
-        np.asarray([np.asarray(r["__qv"], dtype=np.float64) for r in qrows])
+    return _query(
+        spark, path, PQ, queries, k, n_probe, rerank, rerank_factor,
+        query_id, query_vec, corpus_id, corpus_vec, max_collected_queries,
     )
-    # centroid ranking in numpy (cosine == dot of normalized pairs)
-    cn = _l2_normalize(cents)
-    csims = Q @ cn.T
-    order = np.argsort(-csims, axis=1, kind="stable")[:, :n_probe]
-    probes_by_bucket: dict[int, list[int]] = {}
-    for qi in range(order.shape[0]):
-        for b in order[qi]:
-            probes_by_bucket.setdefault(int(b), []).append(qi)
-    buckets = sorted(probes_by_bucket)
-
-    lut = np.stack(
-        [Q[:, j * sub : (j + 1) * sub] @ B[j].T for j in range(m_sub)], axis=1
-    )
-    n_cand = k * rerank_factor if rerank is not None else k
-
-    idx = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
-    cds = idx.select("bucket", "vec_id", "code")
-    out_schema = StructType(
-        [
-            StructField("qid", q_sel.schema["qid"].dataType),
-            StructField("vec_id", cds.schema["vec_id"].dataType),
-            StructField("sim", DoubleType()),
-        ]
-    )
-
-    from spatialpandas_spark.operators.pq import _group_topk, _rerank_pairs
-
-    def _reduce(q, v, s):
-        return _group_topk(q, v, s, n_cand)
-
-    def adc_scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: list = []
-        for pdf in batches:
-            ok = pdf["code"].notna()
-            if not ok.any():
-                continue
-            pdf = pdf[ok]
-            bk = pdf["bucket"].to_numpy()
-            vid = pdf["vec_id"].to_numpy()
-            C = np.frombuffer(
-                b"".join(bytes(b) for b in pdf["code"]), dtype=np.uint8
-            ).reshape(-1, m_sub)
-            for b in np.unique(bk):
-                qs_b = probes_by_bucket.get(int(b))
-                if not qs_b:
-                    continue
-                rows = np.flatnonzero(bk == b)
-                Cb = C[rows]
-                scores = np.zeros((len(qs_b), len(rows)))
-                lsel = lut[qs_b]
-                for j in range(m_sub):
-                    scores += lsel[:, j, :][:, Cb[:, j]]
-                qcol = np.repeat(np.asarray(qs_b), len(rows))
-                vcol = np.tile(vid[rows], len(qs_b))
-                acc.append(_reduce(qcol, vcol, scores.ravel()))
-        if acc:
-            q, v, s = (np.concatenate([a[i] for a in acc]) for i in range(3))
-            q, v, s = _reduce(q, v, s)
-            yield pd.DataFrame({"qid": qids[q], "vec_id": v, "sim": s})
-
-    cand = cds.mapInPandas(adc_scan, out_schema)
-    if rerank is None:
-        return _topk_rerank(cand, k)
-    if isinstance(rerank, str):
-        if rerank != "stored":
-            raise ValueError(f"unknown rerank mode {rerank!r}")
-        if not meta.get("store_vectors"):
-            raise ValueError(
-                "rerank='stored' requires build_ivfpq_index(store_vectors=True)"
-            )
-        cv = idx.select("vec_id", F.col("vec").alias("__cv"))
-    else:
-        cv = rerank.select(
-            F.col(corpus_id).alias("vec_id"),
-            F.col(corpus_vec).cast("array<double>").alias("__cv"),
-        )
-    # broadcast the candidate side so the stored/pruned vector
-    # partitions stream through a broadcast hash join instead of being
-    # shuffled (round-14 b20/b21/b31 profile fix) — strategy chosen by
-    # the construction-time bound so the forced hint can never exceed
-    # the broadcast cap when the index scan has many partitions
-    # (round-15 advice fix, see pq._rerank_pairs)
-    pairs = _rerank_pairs(
-        cand, q_sel, cv, n_cand,
-        n_parts=cds.rdd.getNumPartitions(),
-        n_queries=len(qids), dim=Q.shape[1],
-    )
-    return _topk_rerank(pair_cosine_arrow(pairs), k)
-
-
-def _query_ivfpq_distributed(
-    spark: SparkSession,
-    path: str,
-    meta: dict,
-    q_sel: DataFrame,
-    k: int,
-    n_probe: int,
-    rerank,
-    rerank_factor: int,
-    corpus_id: str,
-    corpus_vec: str,
-) -> DataFrame:
-    """Oversized-query IVF-PQ probe, fully distributed:
-
-    1. probe assignment — an Arrow pass over the query frame ranks
-       centroids per query with the SAME stable argsort the collected
-       path uses and explodes to (qid, __qv, bucket) probe rows;
-    2. the DISTINCT probed buckets (<= n_centroids, bounded) are
-       collected and pushed as a static partition filter, keeping the
-       collected path's planning-time pruning;
-    3. a bucket equi-join builds the (query, code) pairs each query
-       actually probes, scored by the shared :func:`~spatialpandas_spark
-       .operators.pq._adc_pair_scan`;
-    4. optional exact rerank joins WITHOUT broadcasting the large query
-       side.
-
-    Same candidate set and ADC arithmetic as the collected path — the
-    over-threshold pytest pins row-identity across the boundary."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    from spatialpandas_spark.operators.pq import (
-        _adc_pair_scan,
-        _books_array,
-        _l2_normalize,
-    )
-
-    cn = _l2_normalize(np.asarray(meta["centroids"], dtype=np.float64))
-    B = _books_array(meta["codebooks"])
-
-    probe_schema = StructType(
-        [
-            StructField("qid", q_sel.schema["qid"].dataType),
-            StructField("__qv", q_sel.schema["__qv"].dataType),
-            StructField("bucket", IntegerType()),
-        ]
-    )
-
-    def assign_probes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Q = _l2_normalize(
-                np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["__qv"]]
-                )
-            )
-            order = np.argsort(-(Q @ cn.T), axis=1, kind="stable")[:, :n_probe]
-            n_q, n_p = order.shape
-            yield pd.DataFrame(
-                {
-                    "qid": pdf["qid"].to_numpy().repeat(n_p),
-                    "__qv": pdf["__qv"].to_numpy().repeat(n_p),
-                    "bucket": order.ravel().astype("int32"),
-                }
-            )
-
-    # checkpoint: the probe frame feeds BOTH the distinct-bucket collect
-    # and the bucket equi-join — without it the Arrow assignment pass
-    # over the (by definition oversized) query frame runs twice
-    probes = q_sel.mapInPandas(assign_probes, probe_schema).localCheckpoint(
-        eager=True
-    )
-    # distinct probed buckets: bounded by n_centroids — tiny, safe collect
-    buckets = sorted(
-        r["bucket"] for r in probes.select("bucket").distinct().collect()
-    )
-    idx = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
-    cds = idx.select("bucket", "vec_id", "code")
-    pairs = cds.join(probes, "bucket").select("qid", "__qv", "vec_id", "code")
-    out_schema = StructType(
-        [
-            StructField("qid", q_sel.schema["qid"].dataType),
-            StructField("vec_id", cds.schema["vec_id"].dataType),
-            StructField("sim", DoubleType()),
-        ]
-    )
-    n_cand = k * rerank_factor if rerank is not None else k
-    cand = _adc_pair_scan(pairs, B, n_cand, out_schema)
-    if rerank is None:
-        return _topk_rerank(cand, k)
-    if isinstance(rerank, str):
-        if rerank != "stored":
-            raise ValueError(f"unknown rerank mode {rerank!r}")
-        if not meta.get("store_vectors"):
-            raise ValueError(
-                "rerank='stored' requires build_ivfpq_index(store_vectors=True)"
-            )
-        cv = idx.select("vec_id", F.col("vec").alias("__cv"))
-    else:
-        cv = rerank.select(
-            F.col(corpus_id).alias("vec_id"),
-            F.col(corpus_vec).cast("array<double>").alias("__cv"),
-        )
-    rr = (
-        cand.select("qid", "vec_id")
-        .join(q_sel, "qid")
-        .join(cv, "vec_id")
-        .select("qid", "vec_id", "__qv", "__cv")
-    )
-    return _topk_rerank(pair_cosine_arrow(rr), k)
 
 
 def append_to_ivfpq_index(
@@ -498,50 +539,15 @@ def append_to_ivfpq_index(
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
 ) -> None:
-    """Append new vectors to an existing IVF-PQ index under its PINNED
-    centroids and codebooks (one scan + one partitioned append; the
-    sidecar is untouched, so readers never see a half-updated model).
-    Quantization quality for appended data follows the training-time
-    distribution — under real drift, rebuild to re-train; the
-    ``pq_reconstruct_error`` diagnostic over the appended slice is the
-    cheap drift check."""
-    from spatialpandas_spark.operators.pq import pq_encode
-
-    meta = load_ivfpq_meta(path)
-    assigned = bucket_assign_arrow(
-        corpus.select(
-            F.col(corpus_id).alias("vec_id"),
-            F.col(corpus_vec).cast("array<double>").alias("vec"),
-        ).filter(F.col("vec").isNotNull()),
-        meta["centroids"],
-        vec_col="vec",
-    ).withColumnRenamed("__bucket", "bucket")
-    codes = pq_encode(
-        corpus, meta["codebooks"], corpus_id=corpus_id, corpus_vec=corpus_vec
-    )
-    cols = ["vec_id", "bucket", "code"] + (
-        ["vec"] if meta.get("store_vectors") else []
-    )
-    # one file per bucket dir PER APPEND (small-files note in
-    # build_ivf_index); heavy append churn is what compact_spatial_parquet
-    # exists for
-    assigned.join(codes, "vec_id").select(*cols).repartition(
-        "bucket"
-    ).write.mode("append").partitionBy("bucket").parquet(path)
+    """Append new vectors under the index's PINNED centroids and
+    codebooks. Quantization quality for appended data follows the
+    training-time distribution — under real drift, rebuild to re-train;
+    the ``pq_reconstruct_error`` diagnostic over the appended slice is
+    the cheap drift check."""
+    _append(corpus, path, PQ, corpus_id, corpus_vec)
 
 
-# ------------------------------------------------------------ IVF-SQ8 index
-# The production middle ground on the quantized-index curve: IVF
-# partition pruning bounds WHICH bytes a probe reads (n_probe/n_centroids
-# of the corpus, same as the float and PQ indexes), SQ8 bounds HOW MANY
-# bytes per row — dim int8 codes instead of 8*dim float64 (8x) or
-# 4*dim float32 (4x), with near-float recall because ADC dequantizes
-# against the full-precision query (operators/sq.py). Same layout
-# contract as the siblings: bucket-partitioned parquet + one JSON
-# sidecar holding centroids AND the SQ8 params, written after the data
-# so a readable index is always complete.
-
-_SQ_SIDECAR = "_ivfsq8.json"
+# ----------------------------------------------------------- IVF-SQ8 index
 
 
 def build_ivfsq8_index(
@@ -553,98 +559,26 @@ def build_ivfsq8_index(
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
 ) -> dict:
-    """Build a persistent IVF-SQ8 index: spherical-k-means bucket
-    assignment + per-dimension int8 scalar quantization (GLOBAL lo/hi —
-    one corpus scan, 2·dim floats of model state), written partitioned
-    by ``bucket``. ``kmeans_iters=0`` pins the deterministic md5-sample
-    centroids (the exact SQL twin the correctness gate replays).
-    ``store_vectors=True`` also persists the float vectors for
-    self-contained exact rerank — at scale leave False and rerank
-    against the source table. Returns the sidecar dict."""
-    from spatialpandas_spark.operators.sq import sq8_encode, train_sq8
-
-    cents = _centroids(corpus, corpus_id, corpus_vec, n_centroids)
-    if kmeans_iters > 0:
-        cents = kmeans_refine(corpus, cents, kmeans_iters, corpus_id, corpus_vec)
-    params = train_sq8(corpus, corpus_vec=corpus_vec)
-
-    assigned = bucket_assign_arrow(
-        corpus.select(
-            F.col(corpus_id).alias("vec_id"),
-            F.col(corpus_vec).cast("array<double>").alias("vec"),
-        ).filter(F.col("vec").isNotNull()),
-        cents,
-        vec_col="vec",
-    ).withColumnRenamed("__bucket", "bucket")
-    codes = sq8_encode(corpus, params, corpus_id=corpus_id, corpus_vec=corpus_vec)
-    cols = ["vec_id", "bucket", "code"] + (["vec"] if store_vectors else [])
-    joined = assigned.join(codes, "vec_id").select(*cols)
-    # one file per bucket dir — see build_ivf_index's small-files note
-    joined.repartition("bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(path)
-
-    from spatialpandas_spark.sources import fs as _fs
-
-    meta = {
-        "centroids": cents,
-        # repr round-trip: exact IEEE doubles in the sidecar (save_sq8's
-        # convention), so re-probing loads the EXACT quantizer
-        "sq8": {
-            "dim": int(params["dim"]),
-            "lo": [repr(float(x)) for x in params["lo"]],
-            "hi": [repr(float(x)) for x in params["hi"]],
-        },
-        "store_vectors": store_vectors,
-    }
-    _fs.write_text(f"{path.rstrip('/')}/{_SQ_SIDECAR}", json.dumps(meta))
-    meta["sq8"] = {
-        "dim": int(params["dim"]),
-        "lo": [float(x) for x in params["lo"]],
-        "hi": [float(x) for x in params["hi"]],
-    }
-    return meta
+    """Build a persistent IVF-SQ8 index — the production middle ground on
+    the quantized-index curve: spherical-k-means bucket assignment +
+    per-dimension int8 scalar quantization (GLOBAL lo/hi — one corpus
+    scan, 2·dim floats of model state; dim bytes per row instead of
+    8·dim float64, near-float recall because ADC dequantizes against the
+    full-precision query), written partitioned by ``bucket``.
+    ``kmeans_iters=0`` pins the deterministic md5-sample centroids (the
+    exact SQL twin the correctness gate replays). ``store_vectors=True``
+    also persists the float vectors for self-contained exact rerank — at
+    scale leave False and rerank against the source table. Returns the
+    sidecar dict (params as floats; the sidecar stores their exact
+    repr)."""
+    return _build(
+        corpus, path, SQ8, n_centroids, kmeans_iters, store_vectors,
+        corpus_id, corpus_vec,
+    )
 
 
 def load_ivfsq8_meta(path: str, filesystem=None) -> dict:
-    from spatialpandas_spark.sources import fs as _fs
-
-    d = json.loads(
-        _fs.read_text(f"{path.rstrip('/')}/{_SQ_SIDECAR}", filesystem=filesystem)
-    )
-    d["sq8"] = {
-        "dim": int(d["sq8"]["dim"]),
-        "lo": [float(x) for x in d["sq8"]["lo"]],
-        "hi": [float(x) for x in d["sq8"]["hi"]],
-    }
-    return d
-
-
-def _rank_probes_seq(Q, C, n_probe: int):
-    """(n_queries, n_probe) centroid indices by raw cosine DESC with
-    ties to the HIGHER index — the probe contract of
-    ``query_ivf_index``'s ``sort_array(desc)`` over (sim, index)
-    structs and of the gate's ``ORDER BY cos DESC, ci DESC`` replay.
-    Cosines use the sequential-fold dot and the
-    ``dot / (sqrt(qq) * sqrt(cc))`` op order of the SQL ``cos()`` macro
-    — bit-identical, so probe sets can't diverge on near-ties."""
-    import numpy as np
-
-    from spatialpandas_spark.operators.similarity import (
-        _seq_dot,
-        _seq_pair_dot,
-    )
-
-    qn = np.sqrt(_seq_pair_dot(Q, Q))
-    cn = np.sqrt(_seq_pair_dot(C, C))
-    sims = np.empty((Q.shape[0], C.shape[0]), dtype=np.float64)
-    for j in range(C.shape[0]):
-        ok = (qn > 0) & (cn[j] > 0)
-        sims[:, j] = np.where(ok, _seq_dot(Q, C[j]) / (qn * cn[j]), 0.0)
-    # stable argsort over the column-REVERSED matrix: ties keep the
-    # lower reversed index = the HIGHER original index first
-    order_rev = np.argsort(-sims[:, ::-1], axis=1, kind="stable")[:, :n_probe]
-    return (C.shape[0] - 1) - order_rev
+    return _load_meta(path, SQ8, filesystem)
 
 
 def query_ivfsq8_index(
@@ -663,235 +597,14 @@ def query_ivfsq8_index(
 ) -> DataFrame:
     """Probe an IVF-SQ8 index: rank centroids per query (driver-side —
     the probed-bucket union becomes a STATIC planning-time partition
-    filter, the dedup-index discipline), dequantize-and-score only the
-    int8 codes in those buckets (ADC, sequential dim fold — the exact
-    arithmetic of ``sq8_topk``), two-phase top-k. ``rerank`` is ``None``
-    (ADC sims out), a corpus DataFrame (exact-cosine rerank against the
-    source table — the at-scale shape), or ``"stored"`` (vectors
-    persisted with ``store_vectors=True``). Above
-    ``max_collected_queries`` the probe degrades to the fully
-    distributed formulation (``_query_ivfsq8_distributed``) instead of
-    raising. Columns out: (qid, vec_id, sim, rank)."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from spatialpandas_spark.operators.pq import _group_topk, _rerank_pairs
-    from spatialpandas_spark.operators.sq import _scales, _seq_normalize
-
-    meta = load_ivfsq8_meta(path)
-    cents = np.asarray(meta["centroids"], dtype=np.float64)
-    params = meta["sq8"]
-    lo, scale = _scales(params)
-    dim = int(params["dim"])
-
-    q_sel = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(query_vec).cast("array<double>").alias("__qv"),
-    ).filter(F.col("__qv").isNotNull())
-    qrows = q_sel.limit(max_collected_queries + 1).collect()
-    if len(qrows) > max_collected_queries:
-        return _query_ivfsq8_distributed(
-            spark, path, meta, q_sel, k, n_probe, rerank, rerank_factor,
-            corpus_id, corpus_vec,
-        )
-    if not qrows:
-        empty = StructType(
-            [
-                StructField("qid", q_sel.schema["qid"].dataType),
-                StructField(
-                    "vec_id", spark.read.parquet(path).schema["vec_id"].dataType
-                ),
-                StructField("sim", DoubleType()),
-            ]
-        )
-        return spark.createDataFrame([], empty).withColumn(
-            "rank", F.lit(1).cast("int")
-        )
-    qids = np.asarray([r["qid"] for r in qrows])
-    Q = np.asarray([np.asarray(r["__qv"], np.float64) for r in qrows])
-    if Q.ndim != 2 or Q.shape[1] != dim:
-        raise ValueError(
-            f"query vector dim {Q.shape[1] if Q.ndim == 2 else 'ragged'}"
-            f" != index dim {dim}"
-        )
-    Qn = _seq_normalize(Q)
-    order = _rank_probes_seq(Q, cents, n_probe)
-    probes_by_bucket: dict[int, list[int]] = {}
-    for qi in range(order.shape[0]):
-        for b in order[qi]:
-            probes_by_bucket.setdefault(int(b), []).append(qi)
-    buckets = sorted(probes_by_bucket)
-
-    n_cand = k * rerank_factor if rerank is not None else k
-    idx = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
-    cds = idx.select("bucket", "vec_id", "code")
-    out_schema = StructType(
-        [
-            StructField("qid", q_sel.schema["qid"].dataType),
-            StructField("vec_id", cds.schema["vec_id"].dataType),
-            StructField("sim", DoubleType()),
-        ]
+    filter), dequantize-and-score only the int8 codes in those buckets
+    (ADC, sequential dim fold — the exact arithmetic of ``sq8_topk``),
+    two-phase top-k; ``rerank`` as in :func:`_probe`.
+    Columns out: (qid, vec_id, sim, rank)."""
+    return _query(
+        spark, path, SQ8, queries, k, n_probe, rerank, rerank_factor,
+        query_id, query_vec, corpus_id, corpus_vec, max_collected_queries,
     )
-
-    def _reduce(q, v, s):
-        return _group_topk(q, v, s, n_cand)
-
-    def adc_scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: list = []
-        for pdf in batches:
-            ok = pdf["code"].notna()
-            if not ok.any():
-                continue
-            pdf = pdf[ok]
-            bk = pdf["bucket"].to_numpy()
-            vid = pdf["vec_id"].to_numpy()
-            C = np.frombuffer(
-                b"".join(bytes(b) for b in pdf["code"]), dtype=np.uint8
-            ).reshape(len(pdf), -1)
-            if C.shape[1] != dim:
-                raise ValueError(
-                    f"code width {C.shape[1]} != index dim {dim}"
-                )
-            Xhat = lo[None, :] + C.astype(np.float64) * scale[None, :]
-            for b in np.unique(bk):
-                qs_b = probes_by_bucket.get(int(b))
-                if not qs_b:
-                    continue
-                rows = np.flatnonzero(bk == b)
-                Xb = Xhat[rows]
-                # sequential dim fold (sq8_topk's exact arithmetic)
-                S = np.zeros((Xb.shape[0], len(qs_b)), dtype=np.float64)
-                for j in range(dim):
-                    S = S + Xb[:, j : j + 1] * Qn[qs_b, j][None, :]
-                qcol = np.tile(np.asarray(qs_b), len(rows))
-                vcol = np.repeat(vid[rows], len(qs_b))
-                acc.append(_reduce(qcol, vcol, S.ravel()))
-        if acc:
-            q, v, s = (np.concatenate([a[i] for a in acc]) for i in range(3))
-            q, v, s = _reduce(q, v, s)
-            yield pd.DataFrame({"qid": qids[q], "vec_id": v, "sim": s})
-
-    cand = cds.mapInPandas(adc_scan, out_schema)
-    if rerank is None:
-        return _topk_rerank(cand, k)
-    if isinstance(rerank, str):
-        if rerank != "stored":
-            raise ValueError(f"unknown rerank mode {rerank!r}")
-        if not meta.get("store_vectors"):
-            raise ValueError(
-                "rerank='stored' requires build_ivfsq8_index(store_vectors=True)"
-            )
-        cv = idx.select("vec_id", F.col("vec").alias("__cv"))
-    else:
-        cv = rerank.select(
-            F.col(corpus_id).alias("vec_id"),
-            F.col(corpus_vec).cast("array<double>").alias("__cv"),
-        )
-    # broadcast the candidate side so the stored/pruned vector
-    # partitions stream through a broadcast hash join instead of being
-    # shuffled (round-14 b20/b21/b31 profile fix) — strategy chosen by
-    # the construction-time bound so the forced hint can never exceed
-    # the broadcast cap when the index scan has many partitions
-    # (round-15 advice fix, see pq._rerank_pairs)
-    pairs = _rerank_pairs(
-        cand, q_sel, cv, n_cand,
-        n_parts=cds.rdd.getNumPartitions(),
-        n_queries=len(qids), dim=Q.shape[1],
-    )
-    return _topk_rerank(pair_cosine_arrow(pairs), k)
-
-
-def _query_ivfsq8_distributed(
-    spark: SparkSession,
-    path: str,
-    meta: dict,
-    q_sel: DataFrame,
-    k: int,
-    n_probe: int,
-    rerank,
-    rerank_factor: int,
-    corpus_id: str,
-    corpus_vec: str,
-) -> DataFrame:
-    """Oversized-query IVF-SQ8 probe (the `_query_ivfpq_distributed`
-    shape on the SQ8 codec): Arrow probe assignment with the SAME
-    tie-break as the collected path (:func:`_rank_probes_seq`), the
-    bounded distinct-bucket collect keeps the static partition filter,
-    a bucket equi-join builds the (query, code) pairs, and the shared
-    :func:`~spatialpandas_spark.operators.sq._sq8_pair_topk` scores
-    them with the identical dequantize + sequential-fold arithmetic."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    from spatialpandas_spark.operators.sq import _sq8_pair_topk
-
-    cents = np.asarray(meta["centroids"], dtype=np.float64)
-    probe_schema = StructType(
-        [
-            StructField("qid", q_sel.schema["qid"].dataType),
-            StructField("__qv", q_sel.schema["__qv"].dataType),
-            StructField("bucket", IntegerType()),
-        ]
-    )
-
-    def assign_probes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Q = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["__qv"]]
-            )
-            order = _rank_probes_seq(Q, cents, n_probe)
-            n_q, n_p = order.shape
-            yield pd.DataFrame(
-                {
-                    "qid": pdf["qid"].to_numpy().repeat(n_p),
-                    "__qv": pdf["__qv"].to_numpy().repeat(n_p),
-                    "bucket": order.ravel().astype("int32"),
-                }
-            )
-
-    probes = q_sel.mapInPandas(assign_probes, probe_schema).localCheckpoint(
-        eager=True
-    )
-    buckets = sorted(
-        r["bucket"] for r in probes.select("bucket").distinct().collect()
-    )
-    idx = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
-    cds = idx.select("bucket", "vec_id", "code")
-    pairs = cds.join(probes, "bucket").select("qid", "__qv", "vec_id", "code")
-    n_cand = k * rerank_factor if rerank is not None else k
-    cand = _sq8_pair_topk(pairs, meta["sq8"], n_cand)
-    if rerank is None:
-        return cand  # n_cand == k: already the ranked top-k
-    if isinstance(rerank, str):
-        if rerank != "stored":
-            raise ValueError(f"unknown rerank mode {rerank!r}")
-        if not meta.get("store_vectors"):
-            raise ValueError(
-                "rerank='stored' requires build_ivfsq8_index(store_vectors=True)"
-            )
-        cv = idx.select("vec_id", F.col("vec").alias("__cv"))
-    else:
-        cv = rerank.select(
-            F.col(corpus_id).alias("vec_id"),
-            F.col(corpus_vec).cast("array<double>").alias("__cv"),
-        )
-    rr = (
-        cand.select("qid", "vec_id")
-        .join(q_sel, "qid")
-        .join(cv, "vec_id")
-        .select("qid", "vec_id", "__qv", "__cv")
-    )
-    return _topk_rerank(pair_cosine_arrow(rr), k)
 
 
 def append_to_ivfsq8_index(
@@ -901,49 +614,36 @@ def append_to_ivfsq8_index(
     corpus_vec: str = "embedding",
 ) -> None:
     """Append new vectors under the index's PINNED centroids and SQ8
-    params (one scan + one partitioned append; sidecar untouched, so
-    readers never see a half-updated model). Under real distribution
-    drift the dequantization error of appended rows grows — rebuild to
-    retrain, as with the PQ index."""
-    from spatialpandas_spark.operators.sq import sq8_encode
+    params. Under real distribution drift the dequantization error of
+    appended rows grows — rebuild to retrain, as with the PQ index."""
+    _append(corpus, path, SQ8, corpus_id, corpus_vec)
 
-    meta = load_ivfsq8_meta(path)
-    assigned = bucket_assign_arrow(
-        corpus.select(
-            F.col(corpus_id).alias("vec_id"),
-            F.col(corpus_vec).cast("array<double>").alias("vec"),
-        ).filter(F.col("vec").isNotNull()),
-        meta["centroids"],
-        vec_col="vec",
-    ).withColumnRenamed("__bucket", "bucket")
-    codes = sq8_encode(
-        corpus, meta["sq8"], corpus_id=corpus_id, corpus_vec=corpus_vec
-    )
-    cols = ["vec_id", "bucket", "code"] + (
-        ["vec"] if meta.get("store_vectors") else []
-    )
-    assigned.join(codes, "vec_id").select(*cols).repartition(
-        "bucket"
-    ).write.mode("append").partitionBy("bucket").parquet(path)
+
+# -------------------------------------------------------------- compaction
 
 
 def compact_vector_index(
     spark: SparkSession, path: str, min_files: int | None = None
 ) -> int | None:
-    """Repack an append-churned vector index (IVF or IVF-PQ) back to one
-    file per bucket directory — every ``append_to_ivfpq_index`` adds one
-    file per touched bucket, and probe cost grows with file count (the
-    small-files note on ``build_ivf_index``).
+    """Repack an append-churned vector index (flat, SQ8 or PQ) back to
+    one file per bucket directory — every append adds one file per
+    touched bucket, and probe cost grows with file count (the
+    small-files note on ``_write``).
 
     Same safe-swap discipline as ``compact_spatial_parquet``: write the
-    repacked layout NEXT TO the live one, copy the model sidecar so the
-    staged directory is complete, verify row-count equality, then move it
-    over the old directory. Returns the new data-file count, or None when
-    the index already has <= ``min_files`` files (default: one per
-    existing bucket, i.e. already compact)."""
-    from spatialpandas_spark.sources import fs as _fs
-
+    repacked layout NEXT TO the live one, copy the index's model sidecar
+    so the staged directory is complete, verify row-count equality, then
+    move it over the old directory. Any failure before the swap raises
+    and leaves the live index untouched. Returns the new data-file
+    count, or None when the index already has <= ``min_files`` files
+    (default: one per existing bucket, i.e. already compact)."""
     base = path.rstrip("/")
+    sidecars = [
+        p for p in {_sidecar_path(base, c) for c in _CODECS.values()}
+        if _fs.exists(p)
+    ]
+    if len(sidecars) != 1:
+        raise ValueError(f"{base}: expected one index sidecar, found {sidecars}")
     files = _fs.list_files(base, ".parquet", recursive=True)
     df = spark.read.parquet(base)
     buckets = df.select("bucket").distinct().count()
@@ -956,13 +656,8 @@ def compact_vector_index(
     df.repartition("bucket").write.mode("overwrite").partitionBy(
         "bucket"
     ).parquet(tmp)
-    for sidecar in (_SIDECAR, _PQ_SIDECAR, _SQ_SIDECAR):
-        try:
-            _fs.write_text(
-                f"{tmp}/{sidecar}", _fs.read_text(f"{base}/{sidecar}")
-            )
-        except (FileNotFoundError, OSError):
-            continue
+    name = sidecars[0].rsplit("/", 1)[1]
+    _fs.write_text(f"{tmp}/{name}", _fs.read_text(sidecars[0]))
     n_after = spark.read.parquet(tmp).count()
     if n_after != n_before:
         raise RuntimeError(

@@ -20,8 +20,10 @@ Spark shapes, all previously proven in this repo:
   collected state is 2·dim floats, never corpus rows;
 - **encode**: Arrow-batched linear scan -> ``(vec_id, code binary)``
   (dim bytes per row) — the column a 100 TB deployment persists;
-- **topk**: broadcast queries, per-partition ADC scan + local top-k
-  (the two-phase reducer shared with similarity.py/pq.py via
+- **topk**: ``SQ8`` is the codec of the IVF-SQ8 index
+  (operators/similarity_index.py) and ``sq8_topk`` that index's probe
+  over a single bucket: collected queries, per-partition ADC scan +
+  local top-k (the two-phase reducer shared with similarity.py via
   ``_group_topk`` — tie-break semantics cannot diverge), final window
   over the tiny survivor set only. No query x corpus pair table.
 
@@ -37,16 +39,17 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
     DoubleType,
     IntegerType,
     StructField,
     StructType,
 )
 
-from spatialpandas_spark.operators.pq import _group_topk
-from spatialpandas_spark.operators.similarity import _seq_pair_dot
+from spatialpandas_spark.operators.similarity import (
+    _encode_frame,
+    _seq_pair_dot,
+    _stack,
+)
 
 
 def _seq_normalize(X: np.ndarray) -> np.ndarray:
@@ -85,9 +88,7 @@ def train_sq8(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = _seq_normalize(
-                np.asarray([np.asarray(v, np.float64) for v in pdf["__cv"]])
-            )
+            X = _seq_normalize(_stack(pdf["__cv"]))
             bl, bh = X.min(0), X.max(0)
             lo = bl if lo is None else np.minimum(lo, bl)
             hi = bh if hi is None else np.maximum(hi, bh)
@@ -129,73 +130,52 @@ def sq8_encode(
     """Encode to ``(vec_id, code binary)`` — dim bytes per row (4x
     smaller than float32, 8x than the float64 transfer form). Null
     vectors get null codes."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     lo, scale = _scales(params)
     dim = int(params["dim"])
-    out_schema = StructType(
-        [
-            StructField("vec_id", corpus.schema[corpus_id].dataType),
-            StructField("code", BinaryType()),
-        ]
-    )
-    c = corpus.select(
-        F.col(corpus_id).alias("vec_id"),
-        F.col(corpus_vec).cast("array<double>").alias("__cv"),
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mask = pdf["__cv"].notna().to_numpy()
-            codes: list = [None] * len(pdf)
-            if mask.any():
-                X = _seq_normalize(
-                    np.asarray(
-                        [np.asarray(v, np.float64) for v in pdf["__cv"][mask]]
-                    )
-                )
-                if X.shape[1] != dim:
-                    raise ValueError(
-                        f"vector dim {X.shape[1]} != params dim {dim}"
-                    )
-                # floor(x + 0.5) = round-half-UP: the form SQL
-                # replays exactly (np.rint is half-even, which DuckDB
-                # cannot express as one op)
-                q = np.clip(
-                    np.floor((X - lo[None, :]) / scale[None, :] + 0.5),
-                    0, 255,
-                ).astype(np.uint8)
-                enc = [r.tobytes() for r in q]
-                it = iter(enc)
-                codes = [next(it) if ok else None for ok in mask]
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "code": codes})
+    def encode(X):
+        X = _seq_normalize(X)
+        if X.shape[1] != dim:
+            raise ValueError(f"vector dim {X.shape[1]} != params dim {dim}")
+        # floor(x + 0.5) = round-half-UP: the form SQL replays exactly
+        # (np.rint is half-even, which DuckDB cannot express as one op)
+        return np.clip(
+            np.floor((X - lo[None, :]) / scale[None, :] + 0.5), 0, 255
+        ).astype(np.uint8)
 
-    return c.mapInPandas(run, out_schema)
+    return _encode_frame(corpus, corpus_id, corpus_vec, encode)
+
+
+def _params_json(params: dict) -> dict:
+    """SQ8 params as JSON fields; floats round-trip via repr (exact for
+    IEEE doubles), so a reload yields the EXACT quantizer."""
+    return {
+        "dim": int(params["dim"]),
+        "lo": [repr(float(x)) for x in params["lo"]],
+        "hi": [repr(float(x)) for x in params["hi"]],
+    }
+
+
+def _params_from_json(d: dict) -> dict:
+    return {
+        "dim": int(d["dim"]),
+        "lo": [float(x) for x in d["lo"]],
+        "hi": [float(x) for x in d["hi"]],
+    }
 
 
 def save_sq8(params: dict, path: str, filesystem=None) -> None:
     """Persist trained SQ8 params as a JSON sidecar via the object-store
     fs layer (same convention as the tokenizer/index sidecars): the
     reproducibility anchor — re-encoding and probing load the EXACT
-    quantizer. Floats round-trip via repr (exact for IEEE doubles)."""
+    quantizer."""
     import json
 
     from spatialpandas_spark.sources import fs as _fs
 
     _fs.write_text(
         path,
-        json.dumps(
-            {
-                "format": "sq8",
-                "dim": int(params["dim"]),
-                "lo": [repr(float(x)) for x in params["lo"]],
-                "hi": [repr(float(x)) for x in params["hi"]],
-            }
-        ),
+        json.dumps({"format": "sq8", **_params_json(params)}),
         filesystem=filesystem,
     )
 
@@ -210,11 +190,7 @@ def load_sq8(path: str, filesystem=None) -> dict:
     d = json.loads(_fs.read_text(path, filesystem=filesystem))
     if d.get("format") != "sq8":
         raise ValueError(f"not an SQ8 sidecar: {path}")
-    return {
-        "dim": int(d["dim"]),
-        "lo": [float(x) for x in d["lo"]],
-        "hi": [float(x) for x in d["hi"]],
-    }
+    return _params_from_json(d)
 
 
 def sq8_topk(
@@ -227,156 +203,75 @@ def sq8_topk(
     max_collected_queries: int = 65536,
 ) -> DataFrame:
     """Approximate top-k by cosine against the SQ8 codes (ADC:
-    dequantized corpus x float query), two-phase like every top-k here:
-    per-partition scan + local top-k, final window over survivors.
+    dequantized corpus x float query): the IVF probe
+    (``similarity_index._probe``) over a single bucket — per-partition
+    scan + local top-k, final window over survivors. Above
+    ``max_collected_queries`` queries it switches to the distributed
+    pair-join formulation with the same dequantize + sequential-fold
+    arithmetic per (query, code) pair. Query dims are validated against
+    ``params['dim']``; an empty/all-null query side returns an empty
+    frame with the declared schema. Columns out: (qid, vec_id, sim,
+    rank)."""
+    from spatialpandas_spark.operators.similarity_index import _probe
 
-    The query side is collected only when it has at most
-    ``max_collected_queries`` rows (bounded ``limit(n+1)`` probe); above
-    that the operator switches to the fully distributed pair-join
-    formulation (``brute_force_topk``'s discipline) — same dequantize +
-    sequential-fold arithmetic per (query, code) pair, no driver
-    materialization. Query dims are validated against ``params['dim']``
-    (a longer query would otherwise silently score a truncated prefix);
-    an empty/all-null query side returns an empty frame with the
-    declared schema. Columns out: (qid, vec_id, sim, rank)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql.window import Window
-
-    lo, scale = _scales(params)
-    dim = int(params["dim"])
-    q_sel = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(query_vec).cast("array<double>").alias("__qv"),
-    ).filter(F.col("__qv").isNotNull())
-    qrows = q_sel.limit(max_collected_queries + 1).collect()
-    if len(qrows) > max_collected_queries:
-        pairs = codes.crossJoin(q_sel).select(
-            "qid", "__qv", "vec_id", "code"
-        )
-        return _sq8_pair_topk(pairs, params, k)
-
-    out_schema = StructType(
-        [
-            StructField("qid", q_sel.schema["qid"].dataType),
-            StructField("vec_id", codes.schema["vec_id"].dataType),
-            StructField("sim", DoubleType()),
-        ]
+    return _probe(
+        SQ8, params, queries, codes, k, query_id=query_id,
+        query_vec=query_vec, max_collected_queries=max_collected_queries,
     )
-    if not qrows:
-        spark = queries.sparkSession
-        empty = StructType(
-            list(out_schema.fields)
-            + [StructField("rank", IntegerType())]
-        )
-        return spark.createDataFrame([], empty)
-    qids = np.asarray([r["qid"] for r in qrows])
-    Q = np.asarray([np.asarray(r["__qv"], np.float64) for r in qrows])
-    if Q.ndim != 2 or Q.shape[1] != dim:
-        raise ValueError(
-            f"query vector dim {Q.shape[1] if Q.ndim == 2 else 'ragged'}"
-            f" != params dim {dim}"
-        )
-    Q = _seq_normalize(Q)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        accq, accv, accs = [], [], []
-        for pdf in batches:
-            pdf = pdf[pdf["code"].notna()]
-            if len(pdf) == 0:
-                continue
-            C = np.frombuffer(
-                b"".join(pdf["code"]), dtype=np.uint8
-            ).reshape(len(pdf), -1)
-            if C.shape[1] != dim:
-                raise ValueError(
-                    f"code width {C.shape[1]} != params dim {dim}"
-                )
-            Xhat = lo[None, :] + C.astype(np.float64) * scale[None, :]
-            # sequential left-to-right fold over dims (similarity.py
-            # _seq_dot discipline): batch-shape-independent and
-            # bit-identical to a SQL fold — np.dot's BLAS blocking
-            # would make sims depend on Arrow batch size
-            S = np.zeros((Xhat.shape[0], Q.shape[0]), dtype=np.float64)
-            for j in range(Xhat.shape[1]):
-                S = S + Xhat[:, j : j + 1] * Q[None, :, j]
-            nrows, nq = S.shape
-            qcol = np.tile(qids, nrows)
-            vcol = np.repeat(pdf["vec_id"].to_numpy(), nq)
-            scol = S.ravel()
-            gq, gv, gs = _group_topk(qcol, vcol, scol, k)
-            accq.append(gq), accv.append(gv), accs.append(gs)
-        if accq:
-            gq, gv, gs = _group_topk(
-                np.concatenate(accq), np.concatenate(accv),
-                np.concatenate(accs), k,
+
+class _SQ8Codec:
+    """The SQ8 codec of the IVF index (operators/similarity_index.py owns
+    build, probe, append and compaction). Model: the params dict
+    ``{"dim", "lo", "hi"}``. Queries are sequential-fold normalized; rows
+    dequantize to ``lo + code * scale``; a sim folds dims left to right
+    (similarity.py ``_seq_dot`` discipline) — batch-shape-independent
+    and bit-identical to a SQL fold, where np.dot's BLAS blocking would
+    make sims depend on Arrow batch size."""
+
+    kind = "ivfsq8"
+    sidecar = "_ivfsq8.json"
+
+    def train(self, corpus, corpus_id, corpus_vec):
+        return train_sq8(corpus, corpus_vec=corpus_vec)
+
+    def encode(self, corpus, params, corpus_id, corpus_vec):
+        return sq8_encode(corpus, params, corpus_id, corpus_vec)
+
+    def dump(self, params: dict) -> dict:
+        return {"sq8": _params_json(params)}
+
+    def load(self, meta: dict) -> dict:
+        return {**meta, "sq8": _params_from_json(meta["sq8"])}
+
+    def model(self, meta: dict) -> dict:
+        return meta["sq8"]
+
+    def dim(self, params: dict) -> int:
+        return int(params["dim"])
+
+    def queries(self, params: dict, Q: np.ndarray) -> np.ndarray:
+        return _seq_normalize(Q)
+
+    def rows(self, params: dict, C: np.ndarray) -> np.ndarray:
+        if C.shape[1] != self.dim(params):
+            raise ValueError(
+                f"code width {C.shape[1]} != index dim {self.dim(params)}"
             )
-            yield pd.DataFrame({"qid": gq, "vec_id": gv, "sim": gs})
+        lo, scale = _scales(params)
+        return lo[None, :] + C.astype(np.float64) * scale[None, :]
 
-    survivors = codes.mapInPandas(run, out_schema)
-    w = Window.partitionBy("qid").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        survivors.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    def block(self, Qn: np.ndarray, X: np.ndarray) -> np.ndarray:
+        """(queries x rows) ADC sims."""
+        S = np.zeros((X.shape[0], Qn.shape[0]), dtype=np.float64)
+        for j in range(X.shape[1]):
+            S = S + X[:, j : j + 1] * Qn[None, :, j]
+        return S.T
+
+    def pair(self, Qn: np.ndarray, inv: np.ndarray, X: np.ndarray) -> np.ndarray:
+        """ADC sim of row i against query ``inv[i]`` — the block scorer's
+        fold, so a pair scores bit-identically on either path."""
+        return _seq_pair_dot(X, Qn[inv])
 
 
-def _sq8_pair_topk(pairs: DataFrame, params: dict, k: int) -> DataFrame:
-    """Distributed SQ8 ADC over an explicit (qid, __qv, vec_id, code)
-    pair frame — the oversized-query fallback of :func:`sq8_topk` and
-    the probe scorer of the persistent IVF-SQ8 index. Per pair:
-    sequential-fold normalize the query, dequantize the code, and fold
-    ``sum_j xhat_j * qn_j`` left to right — the EXACT arithmetic of the
-    collected path (row-identity pinned by tests/test_sq.py), then the
-    shared two-phase top-k reducer."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from spatialpandas_spark.operators.similarity import _topk_rerank
-
-    lo, scale = _scales(params)
-    dim = int(params["dim"])
-    out_schema = StructType(
-        [
-            StructField("qid", pairs.schema["qid"].dataType),
-            StructField("vec_id", pairs.schema["vec_id"].dataType),
-            StructField("sim", DoubleType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf[pdf["code"].notna()]
-            if len(pdf) == 0:
-                continue
-            Q = np.asarray(
-                [np.asarray(v, np.float64) for v in pdf["__qv"]]
-            )
-            if Q.ndim != 2 or Q.shape[1] != dim:
-                raise ValueError(
-                    f"query vector dim"
-                    f" {Q.shape[1] if Q.ndim == 2 else 'ragged'}"
-                    f" != params dim {dim}"
-                )
-            Qn = _seq_normalize(Q)
-            C = np.frombuffer(
-                b"".join(bytes(b) for b in pdf["code"]), dtype=np.uint8
-            ).reshape(len(pdf), -1)
-            if C.shape[1] != dim:
-                raise ValueError(
-                    f"code width {C.shape[1]} != params dim {dim}"
-                )
-            Xhat = lo[None, :] + C.astype(np.float64) * scale[None, :]
-            yield pd.DataFrame(
-                {
-                    "qid": pdf["qid"],
-                    "vec_id": pdf["vec_id"],
-                    "sim": _seq_pair_dot(Xhat, Qn),
-                }
-            )
-
-    return _topk_rerank(pairs.mapInPandas(run, out_schema), k)
+SQ8 = _SQ8Codec()

@@ -14,7 +14,14 @@ Typical flow::
     v.ivf_topk(queries, k=10, n_probe=4)       # bucketed scale path
     params = v.train_sq8()                     # 4x int8 codes
     codes = v.sq8_encode(params)
+    v.build_index(path, kind="ivfsq8")         # persistent IVF index
+    v.query_index(path, queries, kind="ivfsq8", rerank=v.df)
     clean = v.semantic_dedup(threshold=0.97)   # SemDeDup, chainable
+
+The persistent index is one IVF index (operators/similarity_index.py)
+whose bucket rows are flat float vectors (``kind='ivf'``) or codes of
+the SQ8 (``'ivfsq8'``) or PQ (``'ivfpq'``) codec; ``build_index`` and
+``query_index`` look the codec up in that module's kind table.
 """
 
 from __future__ import annotations
@@ -88,23 +95,18 @@ class VectorFrame:
 
     # ------------------------------------------- persistent indexes
     def build_index(self, path: str, kind: str = "ivfsq8", **kw):
-        """Build a persistent bucket-partitioned ANN index at ``path``.
-        ``kind`` picks the point on the bytes/recall curve: 'ivf'
-        (float, exact scores), 'ivfsq8' (int8 codes, 4-8x fewer probe
-        bytes, near-float recall — the production default), 'ivfpq'
-        (m_sub bytes, coarsest). Returns the model sidecar
-        (centroids/params)."""
+        """Build a persistent bucket-partitioned IVF index at ``path``.
+        ``kind`` picks the codec of the bucket rows, i.e. the point on
+        the bytes/recall curve: 'ivf' (flat float vectors, exact
+        scores), 'ivfsq8' (int8 codes, 4-8x fewer probe bytes,
+        near-float recall — the production default), 'ivfpq' (m_sub
+        bytes, coarsest). Options the kind does not take raise TypeError
+        before any scan. Returns the sidecar dict (centroids and codec
+        params), or the centroid table for 'ivf'."""
         from spatialpandas_spark.operators import similarity_index as si
 
-        builders = {
-            "ivf": si.build_ivf_index,
-            "ivfsq8": si.build_ivfsq8_index,
-            "ivfpq": si.build_ivfpq_index,
-        }
-        if kind not in builders:
-            raise ValueError(f"unknown index kind {kind!r}")
-        return builders[kind](
-            self.df, path, corpus_id=self.id_col,
+        return si._build(
+            self.df, path, si._codec(kind), corpus_id=self.id_col,
             corpus_vec=self.vec_col, **kw
         )
 
@@ -115,19 +117,14 @@ class VectorFrame:
         """Probe a persistent index built by :meth:`build_index` (the
         probed buckets become a static planning-time partition
         filter). Pass ``rerank=self.df`` for exact-cosine rerank
-        against this frame."""
+        against this frame (codec kinds)."""
         from spatialpandas_spark.operators import similarity_index as si
 
-        queriers = {
-            "ivf": si.query_ivf_index,
-            "ivfsq8": si.query_ivfsq8_index,
-            "ivfpq": si.query_ivfpq_index,
-        }
-        if kind not in queriers:
-            raise ValueError(f"unknown index kind {kind!r}")
-        return queriers[kind](
-            self.df.sparkSession, path, queries, k=k, **kw
-        )
+        codec = si._codec(kind)
+        spark = self.df.sparkSession
+        if codec is None:
+            return si.query_ivf_index(spark, path, queries, k=k, **kw)
+        return si._query(spark, path, codec, queries, k=k, **kw)
 
     # ------------------------------------------------------------ dedup
     def near_dup_pairs(self, threshold: float = 0.95, **kw) -> DataFrame:

@@ -2,6 +2,9 @@ import os
 
 import pytest
 
+# shared test cases imported by several test modules
+pytest.register_assert_rewrite("tests.ivf_codec_cases")
+
 # test fixtures are MB-scale single files: split small so local cores share
 # the scan (the library default is the production 128m)
 os.environ.setdefault("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m")
@@ -29,18 +32,54 @@ def _slow_tier() -> set:
         return set()
 
 
+def _stale_slow_ids(config, slow: set, items) -> list:
+    """Slow-tier ids that match no collected test, among those whose file
+    was collected in full. A renamed or mistyped id would otherwise move
+    its test silently into the default tier. A file named on the command
+    line by node id (``file.py::test``) is only partly collected, so its
+    ids are not checked."""
+    cwd = str(config.invocation_params.dir)
+    partial = {
+        os.path.abspath(os.path.join(cwd, a.split("::")[0]))
+        for a in config.args if "::" in a
+    }
+    files = {
+        f for f in (item.nodeid.split("::")[0] for item in items)
+        if os.path.join(str(config.rootpath), f) not in partial
+    }
+    collected = {item.nodeid for item in items}
+    return sorted(s for s in slow - collected if s.split("::")[0] in files)
+
+
+@pytest.hookimpl(tryfirst=True)
 def pytest_collection_modifyitems(config, items):
-    if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
-        return
     slow = _slow_tier()
-    if not slow:
+    stale = _stale_slow_ids(config, slow, items)
+    if stale:
+        raise pytest.UsageError(
+            "tests/slow_tier.txt names tests that do not exist: "
+            + ", ".join(stale)
+        )
+    if os.environ.get("SPARK_GRAFT_FULL_TESTS") or not slow:
         return
     marker = pytest.mark.skip(
         reason="slow tier (tests/slow_tier.txt); SPARK_GRAFT_FULL_TESTS=1 runs it"
     )
+    skipped = 0
     for item in items:
         if item.nodeid in slow:
             item.add_marker(marker)
+            skipped += 1
+    config._slow_tier_skipped = skipped
+
+
+def pytest_terminal_summary(terminalreporter, config):
+    skipped = getattr(config, "_slow_tier_skipped", 0)
+    if skipped:
+        terminalreporter.write_line(
+            f"slow tier: {skipped} tests skipped (tests/slow_tier.txt);"
+            " SPARK_GRAFT_FULL_TESTS=1 runs them"
+        )
 
 
 @pytest.fixture(scope="session")

@@ -1,99 +1,22 @@
-"""Persistent IVF-PQ index: build layout, sidecar round-trip, static
-partition pruning in the probe plan, exact-limit equivalence, and
-recall with the three rerank modes."""
+"""Persistent IVF-PQ index: the codec-shared index cases
+(tests/ivf_codec_cases.py) on the PQ codec, plus the PQ-specific
+exact-limit equivalence and recall with the source and stored rerank
+modes."""
 
-import re
-
-import numpy as np
 import pytest
-
-from pyspark.sql import functions as F
 
 from spatialpandas_spark.operators.similarity import brute_force_topk
 from spatialpandas_spark.operators.similarity_index import (
     build_ivfpq_index,
-    load_ivfpq_meta,
     query_ivfpq_index,
 )
-
-
-def _emb(spark, n=240, dim=16, labels=6, noise=0.15, seed=9):
-    rng = np.random.default_rng(seed)
-    protos = rng.standard_normal((labels, dim))
-    lab = rng.integers(0, labels, n)
-    X = protos[lab] + noise * rng.standard_normal((n, dim))
-    return spark.createDataFrame(
-        [(int(i), [float(x) for x in X[i]]) for i in range(n)],
-        "vec_id long, embedding array<double>",
-    )
-
-
-def _qs(emb, n=6):
-    return emb.limit(n).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+from tests.ivf_codec_cases import *  # noqa: F403 - the shared cases
+from tests.ivf_codec_cases import _emb, _qs
 
 
 @pytest.fixture(scope="module")
-def emb(spark):
-    df = _emb(spark)
-    df.cache().count()
-    return df
-
-
-@pytest.fixture(scope="module")
-def index_path(spark, emb, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("ivfpq") / "index")
-    build_ivfpq_index(
-        emb, path, n_centroids=8, m_sub=4, n_codes=32, store_vectors=True
-    )
-    return path
-
-
-def test_sidecar_and_layout(index_path):
-    import os
-
-    meta = load_ivfpq_meta(index_path)
-    assert meta["m_sub"] == 4 and meta["store_vectors"] is True
-    B = np.asarray(meta["codebooks"])
-    assert B.shape == (4, 32, 4)
-    assert len(meta["centroids"]) == 8
-    dirs = [d for d in os.listdir(index_path) if d.startswith("bucket=")]
-    assert len(dirs) >= 2
-
-
-def test_probe_static_partition_pruning(spark, emb, index_path):
-    from spatialpandas_spark.plans.inspect import physical_plan
-
-    out = query_ivfpq_index(spark, index_path, _qs(emb), k=5, n_probe=2)
-    plan = physical_plan(out)
-    # the probe set is computed driver-side, so the filter is STATIC —
-    # a planning-time bucket IN-list on the index scan
-    assert re.search(r"PartitionFilters: \[[^\]]*bucket", plan), plan
-
-
-def test_adc_probe_prunes_vec_column(spark, emb, index_path):
-    """With rerank=None the probe must not read the (stored) float
-    vectors: the index scan's ReadSchema carries only vec_id + code —
-    the 32x byte win is visible in the plan, not just the docstring."""
-    from spatialpandas_spark.plans.inspect import physical_plan
-
-    out = query_ivfpq_index(spark, index_path, _qs(emb), k=5, n_probe=2)
-    plan = physical_plan(out)
-    scan = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
-    assert scan, plan
-    assert "vec_id" in scan[0] and "code" in scan[0], scan[0]
-    assert not re.search(r"ReadSchema:[^\n]*\bvec\b[^_]", scan[0]), scan[0]
-
-
-def test_probe_window_over_survivors_only(spark, emb, index_path):
-    """The final ranking window must sit ABOVE the Arrow partial-top-k
-    (MapInPandas), never over the raw candidate volume."""
-    from spatialpandas_spark.plans.inspect import physical_plan
-
-    out = query_ivfpq_index(spark, index_path, _qs(emb), k=5, n_probe=2)
-    plan = physical_plan(out)
-    assert plan.index("Window") < plan.index("MapInPandas"), plan
+def kind():
+    return "ivfpq"
 
 
 def test_probe_rerank_source_recall(spark, emb, index_path):
@@ -144,88 +67,3 @@ def test_exact_limit_full_probe(spark, tmp_path):
         for r in brute_force_topk(_qs(emb, 4), emb, k=3).collect()
     }
     assert got == want
-
-
-def test_stored_rerank_requires_vectors(spark, emb, tmp_path):
-    path = str(tmp_path / "novec")
-    build_ivfpq_index(emb, path, n_centroids=4, m_sub=4, n_codes=16)
-    with pytest.raises(ValueError, match="store_vectors"):
-        query_ivfpq_index(spark, path, _qs(emb), rerank="stored")
-
-
-def test_query_fallback_row_identical(spark, emb, index_path):
-    """Above max_collected_queries the probe must DEGRADE to the
-    distributed formulation (probe-assignment Arrow pass + bucket
-    equi-join), not raise — identical rows on both sides of the
-    boundary for ADC-only, source-rerank, and stored-rerank modes."""
-    for rr in (None, emb, "stored"):
-        fast = query_ivfpq_index(
-            spark, index_path, _qs(emb, 6), k=4, n_probe=3, rerank=rr
-        ).collect()
-        dist = query_ivfpq_index(
-            spark, index_path, _qs(emb, 6), k=4, n_probe=3, rerank=rr,
-            max_collected_queries=2,
-        ).collect()
-        key = lambda r: (r["qid"], r["rank"])
-        fast_s, dist_s = sorted(fast, key=key), sorted(dist, key=key)
-        assert [(r["qid"], r["vec_id"], r["rank"]) for r in fast_s] == [
-            (r["qid"], r["vec_id"], r["rank"]) for r in dist_s
-        ], rr
-        for a, b in zip(fast_s, dist_s):
-            assert a["sim"] == pytest.approx(b["sim"], abs=1e-12)
-
-
-def test_query_fallback_keeps_static_pruning(spark, emb, index_path):
-    """The distributed fallback still pushes the probed-bucket set as a
-    static partition filter (the <=n_centroids distinct-bucket collect)."""
-    from spatialpandas_spark.plans.inspect import physical_plan
-
-    out = query_ivfpq_index(
-        spark, index_path, _qs(emb, 6), k=4, n_probe=2,
-        max_collected_queries=2,
-    )
-    plan = physical_plan(out)
-    assert re.search(r"PartitionFilters: \[[^\]]*bucket", plan), plan
-
-
-def test_compact_after_appends(spark, tmp_path):
-    from spatialpandas_spark.operators.similarity_index import (
-        append_to_ivfpq_index,
-        compact_vector_index,
-    )
-    from spatialpandas_spark.sources import fs as _fs
-
-    emb = _emb(spark, n=80, seed=21)
-    path = str(tmp_path / "churn")
-    build_ivfpq_index(
-        emb, path, n_centroids=4, m_sub=4, n_codes=16, store_vectors=True
-    )
-    for s in (31, 32, 33):
-        batch = _emb(spark, n=20, seed=s).select(
-            (F.col("vec_id") + 1000 * s).alias("vec_id"), "embedding"
-        )
-        append_to_ivfpq_index(batch, path)
-    n_files_before = len(_fs.list_files(path, ".parquet", recursive=True))
-    assert n_files_before > 4  # churned: multiple files per bucket
-    qs = _qs(emb, 4)
-    before = {
-        (r["qid"], r["vec_id"], r["rank"])
-        for r in query_ivfpq_index(
-            spark, path, qs, k=5, n_probe=4, rerank="stored"
-        ).collect()
-    }
-    n_rows = spark.read.parquet(path).count()
-
-    n_files = compact_vector_index(spark, path)
-    assert n_files is not None and n_files <= 4
-    assert spark.read.parquet(path).count() == n_rows
-    assert load_ivfpq_meta(path)["m_sub"] == 4  # sidecar survived the swap
-    after = {
-        (r["qid"], r["vec_id"], r["rank"])
-        for r in query_ivfpq_index(
-            spark, path, qs, k=5, n_probe=4, rerank="stored"
-        ).collect()
-    }
-    assert after == before
-    # already compact -> no-op
-    assert compact_vector_index(spark, path) is None

@@ -166,21 +166,38 @@ def test_oversized_query_fallback_row_identity(spark, corpus):
     codes.unpersist()
 
 
-def test_query_dim_mismatch_raises(spark, corpus):
+@pytest.mark.parametrize("path", ["collected", "distributed"])
+@pytest.mark.parametrize("codec", ["sq8", "pq"])
+def test_query_dim_mismatch_raises(spark, corpus, codec, path):
+    """One dim check for both codecs on both paths. A 2*D-dim query is a
+    multiple of PQ's m_sub, so PQ once scored its first D dims and
+    returned rows."""
+    from spatialpandas_spark.operators.pq import pq_encode, pq_topk, train_pq
+
     X, df = corpus
-    params = train_sq8(df)
-    codes = sq8_encode(df, params)
+    if codec == "sq8":
+        params = train_sq8(df)
+        codes = sq8_encode(df, params)
+        topk = lambda q, **kw: sq8_topk(q, codes, params, k=3, **kw)
+    else:
+        books = train_pq(df, m_sub=4, n_codes=16, iters=2)
+        codes = pq_encode(df, books)
+        topk = lambda q, **kw: pq_topk(q, codes, books, k=3, **kw)
+    kw = {"max_collected_queries": 0} if path == "distributed" else {}
     wide = spark.createDataFrame(
-        [(0, [0.1] * (D + 3))], "qid long, qvec array<double>"
+        [(0, [0.1] * (2 * D))], "qid long, qvec array<double>"
     )
-    # collected path: raises driver-side before any scan
-    with pytest.raises(ValueError, match="dim"):
-        sq8_topk(wide, codes, params, k=3)
-    # distributed path: raises inside the pair scan
-    with pytest.raises(Exception, match="dim"):
-        sq8_topk(
-            wide, codes, params, k=3, max_collected_queries=0
-        ).collect()
+    # raises driver-side, on the collected (or sampled) query rows
+    with pytest.raises(ValueError, match=f"query vector dim {2 * D} != index dim {D}"):
+        topk(wide, **kw)
+    if path == "distributed":
+        # a wide row past the sampled one: the executor's pair scan raises
+        ragged = spark.createDataFrame(
+            [(0, [0.1] * D), (1, [0.1] * (2 * D))],
+            "qid long, qvec array<double>",
+        )
+        with pytest.raises(Exception, match=f"query vector dim {2 * D} != index dim {D}"):
+            topk(ragged, **kw).collect()
 
 
 def test_empty_query_side_returns_empty_frame(spark, corpus):

@@ -1,76 +1,26 @@
-"""Persistent IVF-SQ8 index (operators/similarity_index.py): build
-layout + sidecar exact round-trip, static partition pruning in the
-probe plan, full-probe equivalence to the one-shot SQ8 operator, recall
-with the three rerank modes, probe tie-break contract, append under
-pinned params, compaction, and the distributed oversized-query path's
-row identity.
-"""
-
-import re
+"""Persistent IVF-SQ8 index: the codec-shared index cases
+(tests/ivf_codec_cases.py) on the SQ8 codec, plus the SQ8-specific
+sidecar exact round-trip, full-probe equivalence to the one-shot SQ8
+operator, recall with the three rerank modes and the probe tie-break
+contract."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from spatialpandas_spark.operators.similarity import brute_force_topk
 from spatialpandas_spark.operators.similarity_index import (
     _rank_probes_seq,
-    append_to_ivfsq8_index,
-    build_ivfsq8_index,
-    compact_vector_index,
     load_ivfsq8_meta,
     query_ivfsq8_index,
 )
 from spatialpandas_spark.operators.sq import sq8_encode, sq8_topk, train_sq8
-
-
-def _emb(spark, n=240, dim=16, labels=6, noise=0.15, seed=9):
-    rng = np.random.default_rng(seed)
-    protos = rng.standard_normal((labels, dim))
-    lab = rng.integers(0, labels, n)
-    X = protos[lab] + noise * rng.standard_normal((n, dim))
-    return spark.createDataFrame(
-        [(int(i), [float(x) for x in X[i]]) for i in range(n)],
-        "vec_id long, embedding array<double>",
-    )
-
-
-def _qs(emb, n=6):
-    return emb.limit(n).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
+from tests.ivf_codec_cases import *  # noqa: F403 - the shared cases
+from tests.ivf_codec_cases import _qs, _rows
 
 
 @pytest.fixture(scope="module")
-def emb(spark):
-    df = _emb(spark)
-    df.cache().count()
-    return df
-
-
-@pytest.fixture(scope="module")
-def index_path(spark, emb, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("ivfsq8") / "index")
-    build_ivfsq8_index(emb, path, n_centroids=8, store_vectors=True)
-    return path
-
-
-def _rows(df):
-    return sorted(
-        (r["qid"], r["rank"], r["vec_id"], r["sim"]) for r in df.collect()
-    )
-
-
-def test_sidecar_and_layout(index_path):
-    import os
-
-    meta = load_ivfsq8_meta(index_path)
-    assert meta["store_vectors"] is True
-    assert len(meta["centroids"]) == 8
-    assert meta["sq8"]["dim"] == 16
-    assert len(meta["sq8"]["lo"]) == len(meta["sq8"]["hi"]) == 16
-    dirs = [d for d in os.listdir(index_path) if d.startswith("bucket=")]
-    assert len(dirs) >= 2
+def kind():
+    return "ivfsq8"
 
 
 def test_sidecar_params_exact_roundtrip(spark, emb, index_path):
@@ -93,36 +43,6 @@ def test_full_probe_equals_one_shot_sq8(spark, emb, index_path):
         query_ivfsq8_index(spark, index_path, _qs(emb), k=5, n_probe=8)
     )
     assert got == want and len(got) == 30
-
-
-def test_probe_static_partition_pruning(spark, emb, index_path):
-    from spatialpandas_spark.plans.inspect import physical_plan
-
-    out = query_ivfsq8_index(spark, index_path, _qs(emb), k=5, n_probe=2)
-    plan = physical_plan(out)
-    assert re.search(r"PartitionFilters: \[[^\]]*bucket", plan), plan
-
-
-def test_adc_probe_prunes_vec_column(spark, emb, index_path):
-    """With rerank=None the probe must not read the stored float
-    vectors: ReadSchema carries only vec_id + code — the 8x byte win
-    visible in the plan."""
-    from spatialpandas_spark.plans.inspect import physical_plan
-
-    out = query_ivfsq8_index(spark, index_path, _qs(emb), k=5, n_probe=2)
-    plan = physical_plan(out)
-    scan = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
-    assert scan, plan
-    assert "vec_id" in scan[0] and "code" in scan[0], scan[0]
-    assert not re.search(r"ReadSchema:[^\n]*\bvec\b[^_]", scan[0]), scan[0]
-
-
-def test_probe_window_over_survivors_only(spark, emb, index_path):
-    from spatialpandas_spark.plans.inspect import physical_plan
-
-    out = query_ivfsq8_index(spark, index_path, _qs(emb), k=5, n_probe=2)
-    plan = physical_plan(out)
-    assert plan.index("Window") < plan.index("MapInPandas"), plan
 
 
 def test_rerank_modes_and_recall(spark, emb, index_path):
@@ -151,26 +71,6 @@ def test_rerank_modes_and_recall(spark, emb, index_path):
     assert _rows(sto) == _rows(src)
 
 
-def test_distributed_query_path_row_identical(spark, emb, index_path):
-    collected = query_ivfsq8_index(
-        spark, index_path, _qs(emb), k=5, n_probe=3
-    )
-    distributed = query_ivfsq8_index(
-        spark, index_path, _qs(emb), k=5, n_probe=3,
-        max_collected_queries=2,
-    )
-    assert _rows(distributed) == _rows(collected)
-    # and with exact rerank across the boundary
-    c2 = query_ivfsq8_index(
-        spark, index_path, _qs(emb), k=5, n_probe=3, rerank=emb
-    )
-    d2 = query_ivfsq8_index(
-        spark, index_path, _qs(emb), k=5, n_probe=3, rerank=emb,
-        max_collected_queries=2,
-    )
-    assert _rows(d2) == _rows(c2)
-
-
 def test_probe_tiebreak_prefers_higher_index():
     """Duplicate centroids tie exactly: the probe order must pick the
     HIGHER centroid index first (sort_array desc struct semantics — the
@@ -181,42 +81,3 @@ def test_probe_tiebreak_prefers_higher_index():
     Q = np.asarray([[2.0, 0.0]], dtype=np.float64)
     order = _rank_probes_seq(Q, C, 3)[0].tolist()
     assert order[:2] == [2, 0]  # the tied pair, higher index first
-
-
-def test_append_and_compact(spark, emb, tmp_path):
-    path = str(tmp_path / "idx")
-    build_ivfsq8_index(emb, path, n_centroids=4, store_vectors=True)
-    extra = _emb(spark, n=40, seed=77).withColumn(
-        "vec_id", F.col("vec_id") + 1000
-    )
-    append_to_ivfsq8_index(extra, path)
-    assert spark.read.parquet(path).count() == 280
-    # appended rows probeable under the pinned model
-    q = extra.limit(2).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    out = query_ivfsq8_index(spark, path, q, k=3, n_probe=4, rerank="stored")
-    got = {(r["qid"], r["rank"]): r["vec_id"] for r in out.collect()}
-    for qid in (1000, 1001):
-        assert got[(qid, 1)] == qid  # exact self-match after rerank
-    n_files = compact_vector_index(spark, path)
-    assert n_files is not None and n_files <= 4
-    # sidecar survived the safe-swap; probe still works
-    out2 = query_ivfsq8_index(spark, path, q, k=3, n_probe=4, rerank="stored")
-    assert {(r["qid"], r["rank"]): r["vec_id"] for r in out2.collect()} == got
-
-
-def test_empty_and_dim_validation(spark, emb, index_path):
-    none = spark.createDataFrame(
-        [(1, None)], "qid long, qvec array<double>"
-    )
-    out = query_ivfsq8_index(spark, index_path, none, k=3)
-    assert out.count() == 0
-    assert out.columns == ["qid", "vec_id", "sim", "rank"]
-    wide = spark.createDataFrame(
-        [(0, [0.1] * 19)], "qid long, qvec array<double>"
-    )
-    with pytest.raises(ValueError, match="dim"):
-        query_ivfsq8_index(spark, index_path, wide, k=3)
-    with pytest.raises(ValueError, match="rerank"):
-        query_ivfsq8_index(spark, index_path, _qs(emb), k=3, rerank="nope")

@@ -145,3 +145,34 @@ def test_persistent_index_delegation(spark, tmp_path):
         v.build_index(str(tmp_path / "x"), kind="hnsw")
     with pytest.raises(ValueError, match="kind"):
         v.query_index(p1, qs, kind="hnsw")
+
+
+def test_build_index_rejects_foreign_options(spark, tmp_path, monkeypatch):
+    """Options the index kind does not take raise TypeError before any
+    scan; the flat kind returns its centroid table."""
+    import os
+
+    from spatialpandas_spark.operators import similarity_index as si
+
+    df = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, float(i % 5)]) for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
+    v = VectorFrame(df)
+    cents = v.build_index(str(tmp_path / "flat"), kind="ivf", n_centroids=2)
+    assert isinstance(cents, list) and len(cents) == 2
+
+    def no_scan(*a, **kw):
+        raise AssertionError("scanned before the option check")
+
+    monkeypatch.setattr(si, "_centroids", no_scan)
+    for kind, kw in [
+        ("ivf", {"store_vectors": True}),
+        ("ivf", {"m_sub": 4}),
+        ("ivfsq8", {"m_sub": 4}),
+        ("ivfpq", {"bits": 4}),
+    ]:
+        path = str(tmp_path / f"bad_{kind}")
+        with pytest.raises(TypeError):
+            v.build_index(path, kind=kind, **kw)
+        assert not os.path.exists(path)
